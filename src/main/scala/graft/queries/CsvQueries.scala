@@ -14,11 +14,23 @@ import graft.sources.Csv.ParserOptions
   *
   * Fixture files are the reference's own test corpus (read-only, at
   * /root/reference/test/data — FIXTURES.md), the source of the published
-  * golden values these queries anchor to.
+  * golden values these queries anchor to. That corpus is not part of this
+  * repository; [[externalInputs]] names each query that reads it.
   */
 object CsvQueries {
 
   private val refData = "/root/reference/test/data"
+  private val fl2Csv = "/root/reference/data/FL2.csv"
+
+  /** The input each query reads from outside this repository, by query
+    * name. These queries cannot run where that file is absent. */
+  val externalInputs: Map[String, String] = Map(
+    "q28_csv_strict" -> s"$refData/prestigePartial.csv",
+    "q29_csv_maybe" -> s"$refData/prestigePartial.csv",
+    "q30_csv_managers" -> s"$refData/managers.csv",
+    "q31_csv_noheader" -> s"$refData/prestigeNoHeader.csv",
+    "q32_csv_categorical" -> s"$refData/catSmall.csv",
+    "q33_csv_fl2_means" -> fl2Csv)
 
   /** DuckDB-side replicas of the reference parse semantics
     * (ColumnTypeable.hs:61-80), matching graft.functions.Parsing. */
@@ -136,15 +148,15 @@ object CsvQueries {
     "q33_csv_fl2_means",
     (s, _) =>
       Csv.readTable(
-          s, "/root/reference/data/FL2.csv",
+          s, fl2Csv,
           ParserOptions(inferencePrefix = 2500))
         .agg(
           round(avg(col("point_latitude")), 9).as("mean_lat"),
           round(avg(col("point_longitude")), 9).as("mean_lon")),
-    Some("""
+    Some(s"""
       SELECT round(avg(point_latitude), 9) AS mean_lat,
              round(avg(point_longitude), 9) AS mean_lon
-      FROM read_csv('/root/reference/data/FL2.csv', header=true)"""),
+      FROM read_csv('$fl2Csv', header=true)"""),
     // the ONE directly baseline-comparable measurement: the reference's
     // benchdemo (BASELINE.md: 0.37 s single-thread) is exactly this
     // workload — infer + read FL2.csv, mean of two Double columns

@@ -89,14 +89,18 @@ class PlanAuditSpec extends SparkSpec {
     // unpartitioned window / cartesian / single-task funnel into ANY
     // oracle-backed query fails here, not in a judge review. A query
     // whose plan cannot even be BUILT is a failure too — no silent skip.
-    val offenders = SparkEntry.allQueries.flatMap { q =>
-      try {
-        val errs = PlanAudit.errors(q.run(spark, sf0001))
-        if (errs.isEmpty) Nil else Seq(q.name -> errs)
-      } catch {
-        case e: Throwable => Seq(q.name -> Seq(s"failed to build plan: ${e.getMessage}"))
+    // A query whose input lies outside the repository and is absent here
+    // is left out, and the test then cancels naming it.
+    forQueriesWithInputs(SparkEntry.allQueries) { queries =>
+      val offenders = queries.flatMap { q =>
+        try {
+          val errs = PlanAudit.errors(q.run(spark, sf0001))
+          if (errs.isEmpty) Nil else Seq(q.name -> errs)
+        } catch {
+          case e: Throwable => Seq(q.name -> Seq(s"failed to build plan: ${e.getMessage}"))
+        }
       }
+      assert(offenders.isEmpty, offenders.mkString("\n"))
     }
-    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -12,7 +12,7 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every query runs at sf0.001 and yields a stable schema") {
-    SparkEntry.allQueries.foreach { q =>
+    forQueriesWithInputs(SparkEntry.allQueries)(_.foreach { q =>
       val df = q.run(spark, sf0001)
       val n = df.count()
       assert(n >= 0, s"${q.name} failed to run")
@@ -20,7 +20,7 @@ class QueriesSpec extends SparkSpec {
       assert(
         df.columns.map(_.toLowerCase).distinct.length == df.columns.length,
         s"${q.name} has duplicate column names")
-    }
+    })
   }
 
   test("q01 groups cover every filtered lineitem row exactly once") {

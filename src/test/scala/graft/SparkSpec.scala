@@ -1,12 +1,47 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.queries.{CsvQueries, QueryDef}
 
 /** Shared local session for specs — one per suite, lazily created. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Absolute path of a repo-owned fixture under
+    * `src/test/resources/frames` (see FIXTURES.md), resolved from the
+    * test classpath. */
+  def fixture(name: String): String = {
+    val url = getClass.getResource(s"/frames/$name")
+    require(url != null, s"no test resource frames/$name on the classpath")
+    Paths.get(url.toURI).toString
+  }
+
+  /** `path` itself, or cancel the calling test when no such file exists.
+    * For inputs the repository does not hold (the reference corpus,
+    * FIXTURES.md): without them the test cannot run, so it reports
+    * canceled with the missing path rather than failed or passed. */
+  def requireFile(path: String): String = {
+    if (!Files.exists(Paths.get(path))) cancel(s"input not present: $path")
+    path
+  }
+
+  /** Runs `body` over the queries whose inputs exist, then cancels the
+    * test, naming each query left out and its missing input, if any was
+    * (inputs outside the repository: `CsvQueries.externalInputs`). A
+    * failure inside `body` still fails the test. */
+  def forQueriesWithInputs(queries: Seq[QueryDef])(body: Seq[QueryDef] => Unit): Unit = {
+    val (absent, present) = queries.partition(q =>
+      CsvQueries.externalInputs.get(q.name).exists(p => !Files.exists(Paths.get(p))))
+    body(present)
+    if (absent.nonEmpty)
+      cancel(absent.map(q => s"${q.name}: input not present: ${CsvQueries.externalInputs(q.name)}")
+        .mkString("\n"))
+  }
 
   /** Temporarily set session confs for `body`, restoring previous values. */
   def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
