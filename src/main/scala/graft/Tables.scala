@@ -1,13 +1,18 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Lazy accessors for the driver-generated parquet test tables
   * (TESTDATA.md). Each accessor is a fresh lazy scan — Catalyst prunes
-  * columns and pushes filters into the parquet reader per-query. */
+  * columns and pushes filters into the parquet reader per-query. The
+  * schema is inferred once per table version ([[Tables.scan]]), so a
+  * repeated accessor call runs no footer-inference job. */
 final case class Tables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.scan(spark, s"$dir/$name.parquet")._1
 
   /** Scale-adaptive scan fan-out (optimization guide §2/§6, round 15).
     *
@@ -31,11 +36,13 @@ final case class Tables(spark: SparkSession, dir: String) {
     * (every registered query is oracle-hash-gated; positional ops take
     * explicit order columns).
     */
-  private def fanOut(df: DataFrame, name: String, key: String): DataFrame = {
+  private def fanOut(name: String, key: String): DataFrame = {
+    val (df, bytes) = Tables.scan(spark, s"$dir/$name.parquet")
     if (!Tables.fanOutEnabled) return df
     val cores = spark.sparkContext.defaultParallelism
-    val splits = Tables.scanSplits(spark, s"$dir/$name.parquet")
-    if (splits >= cores) df else df.repartition(cores, col(key))
+    // unknown size (the listing failed): treat as at-scale, no fan-out
+    if (bytes.forall(Tables.scanSplits(spark, _) >= cores)) df
+    else df.repartition(cores, col(key))
   }
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -51,7 +58,7 @@ final case class Tables(spark: SparkSession, dir: String) {
   // that gain nothing from the pre-partitioning) accepted against the
   // ~3 s the wins return on this 12-query set.
   def orders: DataFrame = orders(fan = true)
-  def lineitem: DataFrame = fanOut(t("lineitem"), "lineitem", "l_orderkey")
+  def lineitem: DataFrame = fanOut("lineitem", "l_orderkey")
 
   /** `fan = false` opts an orders consumer out of the scan fan-out —
     * the q12 case (round 16): a query whose only structure is a
@@ -59,7 +66,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * nothing from the o_orderkey hash exchange and pays it whole
     * (isolated min 0.740 s with vs 0.616 s without, quiet paired). */
   def orders(fan: Boolean): DataFrame =
-    if (fan) fanOut(t("orders"), "orders", "o_orderkey") else t("orders")
+    if (fan) fanOut("orders", "o_orderkey") else t("orders")
 
   /** The events parquet's `ts` physical type has varied across driver
     * testdata generations — TIMESTAMP(NANOS) (which Spark reads as a
@@ -99,7 +106,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     // session/window family re-keys on it anyway — their exchange and
     // this one are the same node when the plan allows reuse
     val raw =
-      if (fan) fanOut(t("events"), "events", "user_id") else t("events")
+      if (fan) fanOut("events", "user_id") else t("events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // nanos-as-long: truncate to micros (floor for post-epoch values)
@@ -118,7 +125,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * compute (a length subtraction) is too cheap to need widening
     * (isolated min 0.363 s with vs 0.178 s without, quiet paired). */
   def documents(fan: Boolean): DataFrame =
-    if (fan) fanOut(t("documents"), "documents", "doc_id") else t("documents")
+    if (fan) fanOut("documents", "doc_id") else t("documents")
   // embeddings deliberately NOT fanned out BY DEFAULT: measured
   // net-negative for the family (round 15 paired A/B: s01 +176%,
   // s07 +153%, s05 +75%, s02 +81%, s03 +55%, s16 +49%) — the kNN
@@ -133,7 +140,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * showed benefits from widening (d10 −11/−24%, s11 −9/−11% paired)
     * even though the family default stays bare. */
   def embeddings(fan: Boolean): DataFrame =
-    if (fan) fanOut(t("embeddings"), "embeddings", "vec_id")
+    if (fan) fanOut("embeddings", "vec_id")
     else t("embeddings")
 }
 
@@ -143,43 +150,77 @@ object Tables {
   private[graft] def fanOutEnabled: Boolean =
     sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "1") != "0"
 
-  /** (dir path -> input bytes) memo — file METADATA only (the fan-out
-    * split estimate), never data or results; avoids re-stat per
-    * accessor call within a run. */
-  private val bytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Parquet settings that change what schema inference returns; the
+    * events accessor flips the first two. */
+  private val inferenceSettings = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
 
-  /** Estimated scan-split count for `path`: input bytes over
-    * `spark.sql.files.maxPartitionBytes` — the same quantity Spark's
-    * file source uses to slice a scan, minus the open-cost refinement
-    * (irrelevant for the single-file test tables and an underestimate
-    * never flips the fan-out the wrong way: fewer estimated splits only
-    * widens a scan that was already narrow). */
-  private[graft] def scanSplits(spark: SparkSession, path: String): Long = {
-    // stat OUTSIDE the memo and cache only successes: a transient stat
-    // failure memoized as 0 bytes would pin the fan-out ON for a
-    // production-sized table for the JVM's lifetime (a silent
-    // cluster-wide repartition of the largest relations). On failure,
-    // warn and treat the table as big (splits = Long.MaxValue → fan-out
-    // OFF), preserving the "identity at scale" guarantee.
-    val cached = bytesCache.get(path)
-    val bytes: Long =
-      if (cached != null) cached
-      else {
-        try {
-          val hp = new org.apache.hadoop.fs.Path(path)
-          val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val len = fs.getContentSummary(hp).getLength
-          bytesCache.put(path, len)
-          len
-        } catch {
-          case e: Throwable =>
-            org.slf4j.LoggerFactory.getLogger("graft.Tables").warn(
-              s"stat of $path failed (${e.getClass.getName}: " +
-                s"${e.getMessage}); treating as at-scale (no fan-out) this call")
-            return Long.MaxValue
-        }
+  /** A table version: the recursive listing of its files as
+    * (name, length, modification time), sorted by name. */
+  private type Listing = Seq[(String, Long, Long)]
+
+  /** Inferred schemas per session, keyed by (path, inference settings)
+    * and valid for one listing. Weak in the session, so a stopped and
+    * dropped session is not kept alive; a rewrite of the table changes
+    * its listing and replaces the entry. */
+  private val schemas = new java.util.WeakHashMap[
+    SparkSession, ConcurrentHashMap[(String, Seq[String]), (Listing, StructType)]]()
+
+  private def listing(spark: SparkSession, path: String): Listing = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val it = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(hp, true)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    files.result().sortBy(_._1)
+  }
+
+  /** The parquet table at `path` as a lazy scan, and its input bytes.
+    *
+    * The schema is inferred once per (session, path, listing, inference
+    * settings) and later scans read with `spark.read.schema(...)`, which
+    * runs no footer-inference job (Frames' `tableTypes`: infer once,
+    * reuse). The listing is taken on every call, so a table rewritten in
+    * place is inferred again, never served a stale schema; the byte total
+    * comes from the same listing. If the listing fails, the scan falls
+    * back to plain inference and the size is unknown (None). */
+  private[graft] def scan(spark: SparkSession, path: String): (DataFrame, Option[Long]) = {
+    val files =
+      try listing(spark, path)
+      catch {
+        case e: Exception =>
+          org.slf4j.LoggerFactory.getLogger("graft.Tables").warn(
+            s"listing of $path failed (${e.getClass.getName}: " +
+              s"${e.getMessage}); inferring its schema this call")
+          return (spark.read.parquet(path), None)
       }
+    val key = (path, inferenceSettings.map(k => spark.conf.getOption(k).orNull))
+    val perSession = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap()))
+    val df = Option(perSession.get(key)) match {
+      case Some((seen, schema)) if seen == files => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val inferred = spark.read.parquet(path)
+        perSession.put(key, (files, inferred.schema))
+        inferred
+    }
+    (df, Some(files.map(_._2).sum))
+  }
+
+  /** Estimated scan-split count for a table of `bytes` input bytes:
+    * bytes over `spark.sql.files.maxPartitionBytes` — the same quantity
+    * Spark's file source uses to slice a scan, minus the open-cost
+    * refinement (irrelevant for the single-file test tables and an
+    * underestimate never flips the fan-out the wrong way: fewer estimated
+    * splits only widens a scan that was already narrow). */
+  private[graft] def scanSplits(spark: SparkSession, bytes: Long): Long = {
     val maxSplit =
       try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")

@@ -1,17 +1,19 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the sketch/vector kernels on the dedup
   * and similarity hot paths (SimHash, MinHash signatures, hyperplane LSH
-  * signatures, cosine). Each is a single tight Java loop per row inlined
-  * into whole-stage codegen via `doGenCode`.
+  * signatures, cosine, IVF nearest cells). Each is a single tight Java
+  * loop per row inlined into whole-stage codegen via `doGenCode`.
   *
   * The higher-order-function formulations these replace
   * (`transform`/`aggregate`/`zip_with`) are semantically identical but
@@ -219,6 +221,46 @@ object SketchUtil {
     val norm = math.sqrt(na) * math.sqrt(nb)
     if (norm == 0.0) 0.0 else d / norm
   }
+
+  /** Ids of the `n` centroids nearest to `v`: every centroid scored by
+    * `cosine` rounded half-up to 9 places (SQL `round(x, 9)`), ranked by
+    * score descending under Spark's double ordering (NaN greatest, -0.0
+    * equal to 0.0), ties by the smaller id. A null `v` scores every
+    * centroid equal, so it yields the ids in ascending order. Equal to
+    * the `transform` + `array_sort` + `slice` composition it replaces,
+    * element for element (pinned in SimilaritySpec). */
+  def nearestCells(v: ArrayData, cids: Array[Long], cents: Array[ArrayData], n: Int): ArrayData = {
+    val k = cids.length
+    val s = new Array[Double](k)
+    var i = 0
+    if (v != null) while (i < k) {
+      val c = cosine(v, cents(i))
+      s(i) =
+        if (c.isNaN || c.isInfinite) c
+        else BigDecimal(c).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+      i += 1
+    }
+    // stable insertion sort of centroid positions (k is tens)
+    val order = new Array[Int](k)
+    i = 0
+    while (i < k) {
+      var j = i
+      while (j > 0 && {
+        val o = order(j - 1)
+        val bySim = SQLOrderingUtil.compareDoubles(s(o), s(i))
+        bySim < 0 || (bySim == 0 && cids(i) < cids(o))
+      }) {
+        order(j) = order(j - 1)
+        j -= 1
+      }
+      order(j) = i
+      i += 1
+    }
+    val out = new Array[Long](math.min(n, k))
+    i = 0
+    while (i < out.length) { out(i) = cids(order(i)); i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }
 
 /** `dot_long(array<long>, array<long>) -> long`: exact integer dot
@@ -414,6 +456,48 @@ case class CosineSim(left: Expression, right: Expression) extends BinaryExpressi
   override def prettyName: String = "cosine_sim"
 }
 
+/** `nearest_cells(array<double>) -> array<long>`: the ids of the `n`
+  * centroids nearest to the vector ([[SketchUtil.nearestCells]]), the
+  * IVF coarse quantizer. The centroids are fields, not a literal child:
+  * plan strings print `nearest_cells(vec, 16 cells, 6)` rather than every
+  * coordinate, and equal centroid lists compare equal, so
+  * canonicalization and exchange reuse still match equal expressions.
+  * Never null: a null vector yields the ids in ascending order. */
+case class NearestCells(child: Expression, cids: Seq[Long], centroids: Seq[Seq[Double]], n: Int)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  require(cids.length == centroids.length, "one id per centroid")
+  require(n >= 0, s"n must be >= 0; got $n")
+  override def inputTypes = Seq(ArrayType(DoubleType))
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+
+  @transient private lazy val cidArr: Array[Long] = cids.toArray
+  @transient private lazy val centArr: Array[ArrayData] =
+    centroids.map(c => UnsafeArrayData.fromPrimitiveArray(c.toArray): ArrayData).toArray
+
+  override def eval(input: InternalRow): Any =
+    SketchUtil.nearestCells(child.eval(input).asInstanceOf[ArrayData], cidArr, centArr, n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val ids = ctx.addReferenceObj("cellIds", cidArr, "long[]")
+    val cents = ctx.addReferenceObj("cellCentroids", centArr,
+      "org.apache.spark.sql.catalyst.util.ArrayData[]")
+    ev.copy(code = code"""
+      |${c.code}
+      |ArrayData ${ev.value} = graft.functions.expressions.SketchUtil.nearestCells(
+      |  ${c.isNull} ? null : ${c.value}, $ids, $cents, $n);
+      """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): NearestCells =
+    copy(child = newChild)
+
+  override def prettyName: String = "nearest_cells"
+
+  override def toString: String = s"$prettyName($child, ${cids.length} cells, $n)"
+}
+
 object Sketches {
   /** Column entry points. Inputs must already be the right element types
     * (`array<string>` tokens/shingles, `array<double>` vectors). */
@@ -433,6 +517,11 @@ object Sketches {
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(
       CosineSim(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** array<double> input only; centroids as (id, vector). */
+  def nearestCells(vec: Column, centroids: Seq[(Long, Seq[Double])], n: Int): Column =
+    ColumnBridge.column(NearestCells(ColumnBridge.expression(vec),
+      centroids.map(_._1), centroids.map(_._2), n))
 
   /** array<long> inputs only. */
   def dotLong(a: Column, b: Column): Column =

@@ -171,9 +171,9 @@ object Clustering {
     * Scale shape: this is the published fix for all-pairs semantic
     * dedup — pairing is confined to clusters, so with k sized to the
     * corpus (k ~ n / targetClusterSize) the candidate count is
-    * O(n * targetClusterSize), not O(n^2), and the only shuffles are
-    * the k-means scalar exchange plus one cluster-keyed hash self-join.
-    * Quantized vectors ride the cluster shuffle once per side. */
+    * O(n * targetClusterSize), not O(n^2), and the shuffles are the
+    * k-means scalar exchange, the cluster-keyed repartition, and the
+    * self-join salted on (cluster, salt). */
   def semDedup(
       vectors: DataFrame,
       idCol: String,
@@ -183,14 +183,14 @@ object Clustering {
       tau: Double,
       scale: Double = 1e6): DataFrame = {
     import graft.functions.expressions.Sketches.dotLong
-    // The explicit repartition is load-bearing: the assignment relation
-    // is consumed THREE times (both self-join sides + the final output
-    // join), and Spark cannot share an un-materialized subplan — without
-    // it the quantize + centroid-argmin scan runs three times. Routing
-    // every consumer through ONE cluster-keyed Exchange lets
-    // ReuseExchange compute the assignment once; the self-join's
-    // distribution requirement is then already satisfied, so this adds
-    // no shuffle the join would not have done anyway.
+    // The assignment relation is consumed three times (both self-join
+    // sides + the final output join). The consumers prune and filter it
+    // differently, so ReuseExchange does not share this repartition: the
+    // final plan scans and assigns three times. Nor does it satisfy the
+    // self-join's distribution: the join is salted (below) and keys on
+    // (cluster, __salt), so a shuffled join re-partitions both sides
+    // above it; a broadcast self-join keeps the streamed side as laid
+    // out here.
     val assigned = kmeansAssignments(vectors, idCol, vecCol, k, iters, scale)
       .withColumn("__n2", dotLong(col("__q"), col("__q")))
       // explicitly SIZED repartition (round 16): unsized repartition(col)

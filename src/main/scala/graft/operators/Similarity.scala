@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.functions.VectorFunctions._
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -228,30 +229,16 @@ object Similarity {
             lit(0L), (acc, t) => acc + t)).as("proj"))
   }
 
-  /** The `n` nearest centroid cells for a vector, scan-local: centroids
-    * enter as ONE array literal, scoring/sorting is per-row array math
-    * (no join, no shuffle). Shared by the inline IVF join, the index
-    * writer, and the probe. */
+  /** The `n` nearest centroid cells for a vector, scan-local: one native
+    * [[graft.functions.expressions.NearestCells]] kernel per row, the
+    * centroids held as expression fields (no join, no shuffle, and plan
+    * strings name the cell count, not every coordinate). Shared by the
+    * inline IVF join, the index writer, and the probe. */
   private def cellsFor(
       centroids: Array[(Long, Seq[Double])],
       vec: org.apache.spark.sql.Column,
-      n: Int): org.apache.spark.sql.Column = {
-    val centroidArr = array(centroids.map { case (cid, v) =>
-      struct(lit(cid).as("cid"), array(v.map(lit): _*).as("cv"))
-    }: _*)
-    val scored = transform(
-      centroidArr,
-      c => struct(
-        round(cosine(vec, c("cv")), 9).as("s"),
-        c("cid").as("cid")))
-    val sorted = array_sort(
-      scored,
-      (l, r) =>
-        when(l("s") > r("s"), -1).when(l("s") < r("s"), 1)
-          .when(l("cid") < r("cid"), -1).when(l("cid") > r("cid"), 1)
-          .otherwise(0))
-    slice(transform(sorted, s => s("cid")), 1, n)
-  }
+      n: Int): org.apache.spark.sql.Column =
+    graft.functions.expressions.Sketches.nearestCells(vec, centroids.toSeq, n)
 
   /** Corpus side of the IVF structure: (cell, neighbor_id, vector),
     * plus any `attrCols` carried verbatim — the metadata a FILTERED
@@ -382,13 +369,16 @@ object Similarity {
       sortCols = Seq("cell", "neighbor_id"))
   }
 
-  /** Probe a persisted [[writeIvfIndex]] table: queries (small — they are
-    * collected once to enumerate probed cells, and broadcast into the
-    * join) probe their `nProbe` best cells against the INDEX ONLY.
-    * Plan shape, pinned in PlanSpec: the index side has NO Exchange (the
-    * query side broadcasts) and the `cell IN (probed...)` literal prunes
-    * non-probed buckets inside the scan — the corpus is neither shuffled
-    * nor fully read, which is the entire point of persisting the index.
+  /** Probe a persisted [[writeIvfIndex]] table: queries (small) probe
+    * their `nProbe` best cells against the INDEX ONLY. The query side is
+    * collected ONCE — id, vector and probed cells per query — and both
+    * the `cell IN (probed...)` list and the broadcast join side are taken
+    * from those rows, so the query input is scanned once and no job runs
+    * just to enumerate cells. Plan shape, pinned in BucketingSpec: the
+    * index side has NO Exchange (the query side broadcasts) and the
+    * `cell IN (probed...)` literal prunes non-probed buckets inside the
+    * scan — the corpus is neither shuffled nor fully read, which is the
+    * entire point of persisting the index.
     *
     * `filter` is FILTERED vector search (the vector-DB metadata
     * predicate): a Column over the index's `attrCols` applied INSIDE
@@ -408,9 +398,18 @@ object Similarity {
       nProbe: Int = 4,
       filter: Option[org.apache.spark.sql.Column] = None,
       passAttrs: Seq[String] = Nil): DataFrame = {
-    val q = queryProbes(queries, idCol, vecCol, centroids, nProbe)
-    // bounded: |queries| x nProbe cell ids
-    val probed = q.select(col("cell")).distinct().collect().map(_.getLong(0))
+    val probes = queries.select(
+      col(idCol).as("query_id"),
+      col(vecCol).cast("array<double>").as("__qv"),
+      cellsFor(centroids, col(vecCol).cast("array<double>"), nProbe).as("cell"))
+    // bounded: |queries| rows of nProbe cell ids each
+    val rows = probes.collect()
+    val q = spark.createDataFrame(
+      java.util.Arrays.asList(rows.flatMap(r =>
+        r.getSeq[Long](2).map(c => Row(r.get(0), r.get(1), c))): _*),
+      StructType(probes.schema.fields.init :+
+        StructField("cell", LongType, nullable = false)))
+    val probed = rows.flatMap(_.getSeq[Long](2)).distinct.sorted
     val idx = filter.foldLeft(
       spark.table(table)
         .filter(col("cell").isin(probed.toSeq: _*)))(_.filter(_))

@@ -546,4 +546,127 @@ class SimilaritySpec extends SparkSpec {
       .distinct().collect().map(_.getDouble(0))
     assert(norms.length == 1, s"augmented norms not constant: ${norms.toSeq}")
   }
+
+  test("nearest_cells kernel == the HOF transform/array_sort/slice formulation") {
+    import spark.implicits._
+    import graft.functions.expressions.{NearestCells, Sketches}
+    // the higher-order-function cellsFor the kernel replaced, verbatim:
+    // reference semantics for NearestCells
+    def hofCellsFor(
+        centroids: Seq[(Long, Seq[Double])],
+        vec: org.apache.spark.sql.Column,
+        n: Int): org.apache.spark.sql.Column = {
+      val centroidArr = array(centroids.map { case (cid, v) =>
+        struct(lit(cid).as("cid"), array(v.map(lit): _*).as("cv"))
+      }: _*)
+      val scored = transform(
+        centroidArr,
+        c => struct(
+          round(graft.functions.VectorFunctions.cosine(vec, c("cv")), 9).as("s"),
+          c("cid").as("cid")))
+      val sorted = array_sort(
+        scored,
+        (l, r) =>
+          when(l("s") > r("s"), -1).when(l("s") < r("s"), 1)
+            .when(l("cid") < r("cid"), -1).when(l("cid") > r("cid"), 1)
+            .otherwise(0))
+      slice(transform(sorted, s => s("cid")), 1, n)
+    }
+    val rnd = new scala.util.Random(20261019L)
+    val dim = 6
+    def vec(): Seq[Double] = Seq.fill(dim)(math.rint(rnd.nextGaussian() * 1000) / 1000)
+    val base = Seq.fill(9)(vec())
+    // ids out of position order; two exact duplicates under other ids
+    // (tied scores), one zero centroid (cosine 0 for every vector)
+    val centroids: Seq[(Long, Seq[Double])] =
+      base.zipWithIndex.map { case (v, i) => ((i * 7L + 3) % 17, v) } ++
+        Seq(2L -> base(4), 40L -> base(1), 16L -> Seq.fill(dim)(0.0))
+    val k = centroids.size
+    val queries: Seq[(Long, Seq[Double])] =
+      (0 until 40).map(i => (i.toLong, vec())) ++ Seq(
+        100L -> Seq.fill(dim)(0.0),
+        101L -> (null: Seq[Double]),
+        102L -> (Double.NaN +: vec().tail),
+        103L -> (Double.PositiveInfinity +: vec().tail),
+        104L -> base(4),
+        105L -> base(4).map(-_),
+        106L -> vec().take(3))
+    // behind an exchange, so the projection runs in a stage (a local
+    // relation would be folded on the driver, interpreted)
+    val df = queries.toDF("id", "v").repartition(2)
+    val ns = Seq(0, 1, 3, k, k + 1)
+    def compare(): Unit = {
+      val got = df.select(col("id") +: ns.flatMap(n => Seq(
+        Sketches.nearestCells(col("v"), centroids, n).as(s"kernel_$n"),
+        hofCellsFor(centroids, col("v"), n).as(s"hof_$n"))): _*).collect()
+      assert(got.length == queries.size)
+      got.foreach { r =>
+        ns.foreach { n =>
+          val kernel = r.getSeq[Long](r.fieldIndex(s"kernel_$n"))
+          val hof = r.getSeq[Long](r.fieldIndex(s"hof_$n"))
+          assert(kernel == hof, s"id ${r.getLong(0)} n=$n: kernel $kernel, hof $hof")
+          assert(kernel.size == math.min(n, k))
+        }
+      }
+      // a null vector yields the ids in ascending order
+      val nullRow = got.find(_.getLong(0) == 101L).get
+      assert(nullRow.getSeq[Long](nullRow.fieldIndex(s"kernel_$k")) ==
+        centroids.map(_._1).sorted)
+    }
+    compare() // whole-stage code generation
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(compare()) // interpreted
+    // same result type and nullability as the formulation it replaced
+    def typeOf(c: org.apache.spark.sql.Column) = {
+      val f = df.select(c).schema.head
+      (f.dataType, f.nullable)
+    }
+    assert(typeOf(Sketches.nearestCells(col("v"), centroids, 3)) ==
+      typeOf(hofCellsFor(centroids, col("v"), 3)))
+
+    // value equality: equal centroid lists built separately are equal
+    // expressions, so canonicalization and exchange reuse still match
+    val child = org.apache.spark.sql.catalyst.expressions.Literal.create(null,
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))
+    val a = NearestCells(child, centroids.map(_._1), centroids.map(_._2), 3)
+    val b = NearestCells(child, centroids.map(_._1).toList,
+      centroids.map(_._2.toVector).toVector, 3)
+    assert(a == b && a.hashCode == b.hashCode && a.semanticEquals(b))
+    assert(a != a.copy(n = 4))
+    assert(a.toString == "nearest_cells(null, 12 cells, 3)")
+  }
+
+  test("a writeIvfIndex plan prints the cell count, not the centroid coordinates") {
+    val cents = Similarity.sampleCentroids(emb, "vec_id", "embedding", nCells = 16)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
+        plans.add(qe.toString); ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = {
+        plans.add(qe.toString); ()
+      }
+    }
+    spark.listenerManager.register(qel)
+    try {
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents,
+        "ivf_plan_text_spec", numBuckets = 4)
+      var prev = -1; var spins = 0
+      while ((plans.isEmpty || prev != plans.size) && spins < 50) {
+        prev = plans.size; Thread.sleep(100); spins += 1
+      }
+    } finally {
+      spark.listenerManager.unregister(qel)
+      spark.sql("DROP TABLE IF EXISTS ivf_plan_text_spec")
+    }
+    import scala.jdk.CollectionConverters._
+    val texts = plans.asScala.toSeq
+    assert(texts.exists(_.contains("nearest_cells(")), s"no write plan seen:\n${texts.mkString("\n")}")
+    val coords = cents.flatMap(_._2).map(_.toString).filter(_.length >= 8).distinct
+    assert(coords.nonEmpty)
+    for (t <- texts; c <- coords)
+      assert(!t.contains(c), s"plan text prints centroid coordinate $c")
+  }
 }
