@@ -1,25 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection aid: `runMain graft.Explain t17 q59` prints the
   * formatted physical plan of every query whose name starts with an
-  * argument, against `SPARK_GRAFT_SF_DIR` (default sf0.001). The
-  * `.explain("formatted")` loop the build brief prescribes after each
-  * operator lands, packaged so it is one sbt invocation. */
+  * argument, against `SPARK_GRAFT_SF_DIR` (default sf0.001), on a
+  * [[Session.local]] session: the `.explain("formatted")` check after
+  * each operator change, as one sbt invocation. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    // plan-shape sensitivity: override to print the plan a cluster-sized
-    // partition count would produce (round-14 partition-knob audit)
-    val sp = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", sp)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     val wanted = if (args.isEmpty) Seq("q01") else args.toSeq
     SparkEntry.allQueries
       .filter(q => wanted.exists(q.name.startsWith))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -11,26 +10,11 @@ import scala.collection.mutable
   * (shuffle read/write bytes, spill, input bytes, task count). Prints a
   * per-job breakdown so the expensive jobs inside a multi-action query
   * (iterative rounds, persisted setup, the final noop sink) are
-  * attributable without the UI. Same session shape as Bench
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions=cpus, AQE on). */
+  * attributable without the UI. Runs on [[Session.local]]. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val warehouse = java.nio.file.Files
-      .createTempDirectory("graft-prof-wh").toFile
-    warehouse.deleteOnExit()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     final case class JobRec(
       var desc: String = "", var start: Long = 0L, var end: Long = 0L,

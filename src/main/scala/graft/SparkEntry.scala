@@ -29,7 +29,4 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q =>
       q.oracle.orElse(q.oracleFn.map(_())).map(o => q.name -> o.trim)).toMap
-
-  /** Headline queries timed by graft.Bench. */
-  def benchQueries: Seq[QueryDef] = allQueries.filter(_.bench)
 }

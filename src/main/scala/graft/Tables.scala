@@ -38,7 +38,6 @@ final case class Tables(spark: SparkSession, dir: String) {
     */
   private def fanOut(name: String, key: String): DataFrame = {
     val (df, bytes) = Tables.scan(spark, s"$dir/$name.parquet")
-    if (!Tables.fanOutEnabled) return df
     val cores = spark.sparkContext.defaultParallelism
     // unknown size (the listing failed): treat as at-scale, no fan-out
     if (bytes.forall(Tables.scanSplits(spark, _) >= cores)) df
@@ -145,11 +144,6 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  /** Kill switch for [[Tables.fanOut]] (A/B measurement + escape hatch):
-    * SPARK_GRAFT_SCAN_FANOUT=0 restores the bare scans. */
-  private[graft] def fanOutEnabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_SCAN_FANOUT", "1") != "0"
-
   /** Parquet settings that change what schema inference returns; the
     * events accessor flips the first two. */
   private val inferenceSettings = Seq(
@@ -162,7 +156,7 @@ object Tables {
 
   /** A table version: the recursive listing of its files as
     * (name, length, modification time), sorted by name. */
-  private type Listing = Seq[(String, Long, Long)]
+  private[graft] type Listing = Seq[(String, Long, Long)]
 
   /** Inferred schemas per session, keyed by (path, inference settings)
     * and valid for one listing. Weak in the session, so a stopped and
@@ -171,15 +165,21 @@ object Tables {
   private val schemas = new java.util.WeakHashMap[
     SparkSession, ConcurrentHashMap[(String, Seq[String]), (Listing, StructType)]]()
 
-  private def listing(spark: SparkSession, path: String): Listing = {
+  /** The files under `path`, walked with `listStatus` as Spark's own
+    * `HadoopFSUtils` lists them. `listFiles(path, recursive = true)`
+    * would return the same triples, but it builds a `LocatedFileStatus`
+    * per file, whose constructor reads the file's permissions, and
+    * without the native Hadoop library the local file system forks
+    * `ls -ld` for that, once per file. */
+  private[graft] def listing(spark: SparkSession, path: String): Listing = {
     val hp = new org.apache.hadoop.fs.Path(path)
-    val it = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(hp, true)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    files.result().sortBy(_._1)
+    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[(String, Long, Long)] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    walk(hp).sortBy(_._1)
   }
 
   /** The parquet table at `path` as a lazy scan, and its input bytes.

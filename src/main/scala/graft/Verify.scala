@@ -1,32 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (Array(sfDir, outDir), prefixes) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Throwaway warehouse per run (same rationale as graft.Bench): the
-    // index queries create managed bucketed tables; a shared dir
-    // accumulates state across rounds and races concurrent runs.
-    val warehouse = java.nio.file.Files
-      .createTempDirectory("graft-verify-wh").toFile
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(warehouse)
-    }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     new java.io.File(outDir).mkdirs()
     // optional trailing args restrict to name prefixes (iteration aid;
     // the driver always runs the full set)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Physical-plan linter for the scale antipatterns this library is built
-  * to avoid (SCALE.md): run it in tests or at submit time and fail fast
+  * to avoid: run it in tests or at submit time and fail fast
   * on plans that work at demo scale and die at 100 TB. The same checks
   * PlanSpec pins per-query, packaged as a reusable audit so NEW queries
   * get them for free.

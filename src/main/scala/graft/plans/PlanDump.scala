@@ -1,7 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-
 /** Debugging aid: run one registered query and print its EXECUTED plan
   * (post-AQE), plus counts of the operators that matter for the 100 TB
   * audit (exchanges, reuses, scans). Usage:
@@ -11,12 +9,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     // Execute through THIS QueryExecution (not a fresh one from write())
     // so AQE finalizes it and stage/exchange reuse shows in the dump.

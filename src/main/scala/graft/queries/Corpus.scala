@@ -36,8 +36,7 @@ object Corpus {
              length(text) AS n_chars,
              length(text) - length(replace(text, ' ', '')) + 1 AS n_tokens,
              length(list_distinct(string_split(lower(text), ' '))) AS n_distinct_tokens
-      FROM documents ORDER BY doc_id"""),
-    bench = true)
+      FROM documents ORDER BY doc_id"""))
 
   val t02_quality = QueryDef(
     "t02_quality",
@@ -65,8 +64,7 @@ object Corpus {
           + least((length(replace(text, ' ', '')) * 1.0
                / (length(text) - length(replace(text, ' ', '')) + 1)) / 10.0, 1.0) * 0.2,
           6) AS quality
-      FROM documents ORDER BY doc_id"""),
-    bench = true)
+      FROM documents ORDER BY doc_id"""))
 
   /** Stopword-ratio score columns over a token-list column `ts`,
     * generated from the SAME `langProfiles` the engine scores with
@@ -251,8 +249,7 @@ $langScoreCols
             list_prepend(0::HUGEINT, list_transform(string_split(text, ''), c -> ascii(c)::HUGEINT)),
             (a, b) -> (a * 1000003::HUGEINT + b) % 18446744073709551616::HUGEINT) AS r
         FROM documents)
-      ORDER BY doc_id"""),
-    bench = true)
+      ORDER BY doc_id"""))
 
   /** BPE-ish pretokenization counts — the corpus-size proxy a training
     * pipeline budgets by. Oracle runs the IDENTICAL pattern under RE2. */
@@ -344,8 +341,7 @@ $langScoreCols
           graft.operators.Aggregates.avgExact(col("q"), 6, 6).as("avg_quality"))
         .orderBy(col("lang"))
     },
-    Some(p01Oracle),
-    bench = true)
+    Some(p01Oracle))
 
   /** Per-language token-budget selection: best-quality documents first
     * until the running token count crosses the (2000-token) budget — the
@@ -502,8 +498,7 @@ $langScoreCols
           shingleSize = 3, numHashes = 64, bands = 16)
         .filter(col("jaccard") >= 0.4)
         .orderBy(col("id_a"), col("id_b")),
-    Some(d03Oracle),
-    bench = true)
+    Some(d03Oracle))
 
   /** Exact edit-distance verification over the SAME candidate set as d03
     * ([[Dedup.editVerifiedPairs]]): the character-level revision-dedup
@@ -581,8 +576,7 @@ $langScoreCols
       Dedup
         .simhashPairs(Tables(s, dir).documents, "doc_id", "text", maxHamming = 3)
         .orderBy(col("id_a"), col("id_b")),
-    Some(d04Oracle),
-    bench = true)
+    Some(d04Oracle))
 
   /** Dedup clustering: connected components over d03's verified pair
     * graph — pairwise matches become groups with a minimum-id
@@ -831,8 +825,7 @@ $langScoreCols
         FROM p26_sp)
       SELECT doc_id, split, n_tokens,
              off // 2048 AS pack_id, off % 2048 AS pack_offset
-      FROM p26_p ORDER BY doc_id"""),
-    bench = true)
+      FROM p26_p ORDER BY doc_id"""))
 
   /** SFT conversation assembly ([[graft.operators.Packing.chatTurns]]):
     * flatten each user's event stream into role-tagged chat turns with
@@ -1347,8 +1340,7 @@ $langScoreCols
                    (se0 * se0 / (n0::DOUBLE - 1.0) +
                     se1 * se1 / (n1::DOUBLE - 1.0)), 6) END
         FROM p36_wf) __all
-      ORDER BY section, n_a, key"""),
-    bench = true)
+      ORDER BY section, n_a, key"""))
 
   /** Exact-k weighted sample without replacement
     * ([[graft.operators.Sampling.weightedSampleK]]): 20 documents per
@@ -1793,8 +1785,7 @@ $langScoreCols
           maxBlock = 10000)
         .orderBy(col("a_id"), col("b_id"))
     },
-    Some(d24OracleSql),
-    bench = true)
+    Some(d24OracleSql))
 
   /** Shared by d24 and the persisted-index face d26 (split build +
     * append + probe must serve EXACTLY the one-shot linkage). */
@@ -1880,8 +1871,7 @@ $langScoreCols
           lower = 0.0, upper = 5.0, maxBlock = 10000)
         .orderBy(col("a_id"), col("b_id"))
     },
-    Some(d24OracleSql),
-    bench = true)
+    Some(d24OracleSql))
 
   /** The EXHAUSTIVE within-nation replay (the pre-round-14 d24 oracle):
     * every same-nation pair scored, score >= 0 kept. d27's oracle — the
@@ -1936,10 +1926,10 @@ $langScoreCols
     * Union the four passes, dedupe (identical rows — the score is the
     * same fixed-shape literal sum), and the result provably equals the
     * exhaustive within-nation scoring — which the oracle hash-pins.
-    * Oracle-truth face (bench = false): R2's candidate count is
+    * Oracle-truth face: R2's candidate count is
     * value-range-bound (Ω(n²/range)) — free while n << range, but the
     * honest contract is "exact recall costs a rule per agreeing field",
-    * while the benched d24 pays one composite key and documents its
+    * while d24 pays one composite key and documents its
     * traded tier. */
   val d27_linkage_rules = QueryDef(
     "d27_linkage_rules",
@@ -2091,8 +2081,7 @@ $langScoreCols
           planesPerTable = Dedup.autoPlanes(emb.count()))
         .orderBy(col("id_a"), col("id_b"))
     },
-    Some(d06Oracle),
-    bench = true)
+    Some(d06Oracle))
 
   /** Same hyperplane tables as d06, replayed across the train/eval
     * split (eval = vec_id % 10 == 0). */
@@ -2175,8 +2164,7 @@ $langScoreCols
         FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
         WHERE q.vec_id < 10)
       WHERE rank <= 5
-      ORDER BY query_id, rank"""),
-    bench = true)
+      ORDER BY query_id, rank"""))
 
   /** Exact oracle for s03: same per-vector symmetric int8 quantization,
     * exact integer dot products, same rescale/round — all deterministic
@@ -2215,8 +2203,7 @@ $langScoreCols
           idCol = "vec_id", vecCol = "embedding", k = 5)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s03Oracle),
-    bench = true)
+    Some(s03Oracle))
 
   /** Signed random projection ([[graft.operators.Similarity
     * .randomProjection]]): 64-dim embeddings down to 16 dims through the
@@ -2320,8 +2307,7 @@ $langScoreCols
           centroids = centroids, nProbe = 6)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s02Oracle),
-    bench = true)
+    Some(s02Oracle))
 
   /** Persist-and-probe ANN: the s02 pipeline split into its build/serve
     * halves ([[Similarity.writeIvfIndex]] / [[Similarity.probeIvfIndex]]).
@@ -2351,8 +2337,7 @@ $langScoreCols
           centroids = centroids, nProbe = 6)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s02Oracle),
-    bench = true)
+    Some(s02Oracle))
 
   /** s05's index arriving in TWO ingest drops — [[Similarity
     * .writeIvfIndex]] on the even vec_ids, [[Similarity.appendIvfIndex]]
@@ -2639,8 +2624,7 @@ $langScoreCols
           k = 5, centroids = centroids, codebooks = cb, nProbe = 6, shortlist = 50)
         .orderBy(col("query_id"), col("rank"))
     },
-    Some(s11Oracle),
-    bench = true)
+    Some(s11Oracle))
 
   /** PERSISTED IVF-PQ ([[Similarity.writeIvfPqIndex]] +
     * [[Similarity.probeIvfPqIndex]]): s11's cascade served from a
@@ -2785,8 +2769,7 @@ $langScoreCols
         FROM pshort s JOIN v qv ON s.query_id = qv.vec_id
                       JOIN v nv ON s.neighbor_id = nv.vec_id)
       WHERE rank <= 5
-      ORDER BY query_id, rank"""),
-    bench = true)
+      ORDER BY query_id, rank"""))
 
   /** Exact oracle for s17: the d10 quantization CTE, then the greedy
     * farthest-point rounds unrolled — every `sel` table MATERIALIZED
@@ -3206,8 +3189,7 @@ $langScoreCols
           centroids = centroids, nProbes = Seq(1, 2, 4, 16))
         .orderBy(col("query_id"), col("n_probe"))
     },
-    Some(s07Oracle),
-    bench = true)
+    Some(s07Oracle))
 
   // ---------------- round-4 additions ----------------
 
@@ -3247,8 +3229,7 @@ $langScoreCols
               6) AS top_token_ratio,
         round(CASE WHEN len(ts) = 0 THEN 0.0
               ELSE 1.0 - len(sset) * 1.0 / greatest(len(ts) - 2, 1) END, 6) AS dup_3gram_ratio
-      FROM sh ORDER BY doc_id"""),
-    bench = true)
+      FROM sh ORDER BY doc_id"""))
 
   /** PII scan + redaction. The corpus carries no PII, so deterministic
     * synthetic PII is injected per doc_id (email on even ids, an IPv4
@@ -3423,8 +3404,7 @@ $langScoreCols
              coalesce(a.n_kept, 0) AS n_kept,
              coalesce(a.text_dedup, '') AS text_dedup
       FROM base b LEFT JOIN agg a ON b.doc_id = a.doc_id
-      ORDER BY b.doc_id"""),
-    bench = true)
+      ORDER BY b.doc_id"""))
 
   /** Benchmark decontamination: distinct 3-gram shingle overlap between
     * the training split (doc_id % 10 != 0) and the held-out split
@@ -3464,8 +3444,7 @@ $langScoreCols
           idCol = "doc_id", textCol = "text", shingleSize = 3)
         .orderBy(col("train_id"), col("eval_id"))
     },
-    Some(d09Oracle),
-    bench = true)
+    Some(d09Oracle))
 
   /** Quality-weighted deterministic subsampling: each doc survives with
     * probability quality * 0.5 — soft filtering, the standard way to
@@ -3546,8 +3525,7 @@ $langScoreCols
         FROM scored WHERE doc_id < 50)
       SELECT doc_id, rank, term, tf, df,
              round_even(tfidf * 1000000.0, 0) / 1000000.0 AS tfidf
-      FROM ranked WHERE rank <= 5 ORDER BY doc_id, rank"""),
-    bench = true)
+      FROM ranked WHERE rank <= 5 ORDER BY doc_id, rank"""))
 
   /** Vocabulary coverage — the tokenizer-design question "what fraction
     * of corpus tokens does a top-V vocabulary cover?". Token counts
@@ -3633,8 +3611,7 @@ $langScoreCols
              off // 2048 AS pack_id,
              off % 2048 AS pack_offset,
              (off + n_tokens - 1) // 2048 AS end_pack
-      FROM p ORDER BY doc_id"""),
-    bench = true)
+      FROM p ORDER BY doc_id"""))
 
   /** MATERIALIZED sequence packing ([[graft.operators.Packing
     * .packTokens]]): p06 assigns windows, p12 emits the actual packed
@@ -3688,8 +3665,7 @@ $langScoreCols
              (off + doc_pos) % 64 AS seq_pos,
              token, s.doc_id
       FROM p12_stream s JOIN p12_offs o USING (doc_id)
-      ORDER BY seq_id, seq_pos"""),
-    bench = true)
+      ORDER BY seq_id, seq_pos"""))
 
   /** Per-language consistent sample ([[graft.functions.expressions.BottomK]]):
     * the 16 doc_ids with smallest xxhash64 per stratum — a deterministic
@@ -3743,8 +3719,7 @@ $langScoreCols
       SELECT doc_id, chunk_id, cast(len(wt) AS int) AS n_tokens,
              array_to_string(wt, ' ') AS chunk_text
       FROM w WHERE len(wt) > 0
-      ORDER BY doc_id, chunk_id"""),
-    bench = true)
+      ORDER BY doc_id, chunk_id"""))
 
   /** BM25 retrieval ([[graft.operators.Retrieval.bm25TopK]]): top 25
     * documents for a 4-term query, rational-idf BM25 (k1=1.2, b=0.75).
@@ -3783,8 +3758,7 @@ $langScoreCols
               + sum(CASE WHEN term = 'scan' THEN s ELSE 0.0 END)
               + sum(CASE WHEN term = 'filter' THEN s ELSE 0.0 END)) AS score
       FROM scored GROUP BY doc_id
-      ORDER BY score DESC, doc_id LIMIT 25"""),
-    bench = true)
+      ORDER BY score DESC, doc_id LIMIT 25"""))
 
   /** Unigram LM quality scoring ([[graft.operators.TfIdf.unigramLmScore]]):
     * mean ln p(token) per document under the corpus's own unigram model —
@@ -3817,8 +3791,7 @@ $langScoreCols
       SELECT doc_id, dl,
              round(list_reduce(list_prepend(0.0, vs), (s, t) -> s + t)
                    / cast(dl AS DOUBLE), 6) AS lm_score
-      FROM folded ORDER BY doc_id"""),
-    bench = true)
+      FROM folded ORDER BY doc_id"""))
 
   /** Bigram LM quality scoring ([[graft.operators.TfIdf.bigramLmScore]]):
     * mean ln p(w_i | w_{i-1}) per document under the corpus's own
@@ -3941,8 +3914,7 @@ $langScoreCols
           "doc_id", "text")
         .orderBy(col("doc_id"))
     },
-    Some(t23Oracle),
-    bench = true)
+    Some(t23Oracle))
 
   /** Exact oracle for t24: the t11 BM25 replay per term set (shared
     * tokenize/stats CTEs), the s01 dense-kNN replay for the two query
@@ -4134,7 +4106,6 @@ $langScoreCols
         .orderBy(col("doc_id"))
     },
     None,
-    bench = true,
     oracleFn = Some { () =>
       val (_, segs) = uniTwin()
       val valsRel =
@@ -4436,8 +4407,7 @@ $langScoreCols
              cast(coalesce(a.n_masked, 0) AS INT) AS n_masked_tokens
       FROM documents d LEFT JOIN t30_agg a USING (doc_id)
       ORDER BY d.doc_id"""
-    },
-    bench = true)
+    })
 
   /** GRADED n-gram overlap ([[graft.operators.Scoring.ngramOverlap]]):
     * BLEU-style clipped precision per order between adjacent-document
@@ -4642,8 +4612,7 @@ $langScoreCols
         .textRankKeywords(Tables(s, dir).documents, "text",
           iters = 5, topK = 30),
     Some(textrankOracle(
-      iters = 5, scale = 1000000L, num = 85, den = 100, topK = 30)),
-    bench = true)
+      iters = 5, scale = 1000000L, num = 85, den = 100, topK = 30)))
 
   /** PMI collocations ([[graft.operators.TfIdf.pmiCollocations]]):
     * top adjacent-pair pointwise mutual information with a min-count
@@ -5342,8 +5311,7 @@ $langScoreCols
           max(length(col("text"))).cast("long").as("max_chars"))
         .orderBy(col("source"))
     },
-    Some(p18Oracle),
-    bench = true)
+    Some(p18Oracle))
 
   /** Hashed linear quality model ([[graft.operators.Scoring
     * .hashedLinearScore]]): the fastText/CCNet-style model-scored
@@ -5612,8 +5580,7 @@ $langScoreCols
         .bradleyTerryQuantized(m, "winner", "loser", iters = 4)
         .orderBy(col("player"))
     },
-    Some(bradleyTerryOracle(iters = 4, scale = 1000000L)),
-    bench = true)
+    Some(bradleyTerryOracle(iters = 4, scale = 1000000L)))
 
   /** Blocklist safety filter ([[graft.operators.Curation
     * .blocklistFilter]]): the C4-style bad-phrase gate as one
@@ -5768,8 +5735,7 @@ $langScoreCols
       graft.operators.Graph.pagerankQuantized(edges, "src", "dst", iters = 3)
         .orderBy(col("node"))
     },
-    Some(pagerankOracle(iters = 3, scale = 1000000L, num = 85, den = 100)),
-    bench = true)
+    Some(pagerankOracle(iters = 3, scale = 1000000L, num = 85, den = 100)))
 
   /** Exact oracle for g02: the g01 replay with teleport and dangling
     * mass confined to the seed flag (seeds = even-tagged customers
@@ -6349,7 +6315,7 @@ $langScoreCols
     * the variant exists to avoid. Any fold must stay coprime to an
     * offset it cannot know; the raw id needs no such luck — the
     * replication contract ("item space grows with the data instead of
-    * saturating", the events block in ScaleProbe) is exactly the
+    * saturating") is exactly the
     * growth shape the sweep should measure, and on this graph the
     * 2-path input Σ deg² and the distinct 2-reach grow linearly.
     * Item node ids offset by 10^7 — clear of every corpus' user-id
@@ -6565,8 +6531,7 @@ $langScoreCols
               .as("dst")),
           "src", "dst", radius = 3)
         .orderBy(col("node"), col("r")),
-    Some(g12Oracle(radius = 3)),
-    bench = true)
+    Some(g12Oracle(radius = 3)))
 
   /** Harmonic centrality via HyperBall
     * ([[graft.operators.Graph.harmonicCentrality]]): the centrality
@@ -6630,8 +6595,7 @@ $langScoreCols
             (get_json_object(col("props"), "$.k").cast("long") % 50 + 1000L)
               .as("dst")),
           "src", "dst", radius = 3),
-    Some(g17Oracle(radius = 3, qNum = 90, qDen = 100)),
-    bench = true)
+    Some(g17Oracle(radius = 3, qNum = 90, qDen = 100)))
 
   /** Degree assortativity ([[graft.operators.Graph
     * .degreeAssortativity]]) of the g09 co-engagement item graph: the
@@ -6810,14 +6774,13 @@ $langScoreCols
         .withColumnRenamed("node", "item")
         .orderBy(col("item"))
     },
-    Some(g16Oracle(iters = 3, scale = 1000000L, num = 85, den = 100)),
-    bench = true)
+    Some(g16Oracle(iters = 3, scale = 1000000L, num = 85, den = 100)))
 
-  /** ORACLE-TRUTH-ONLY face (bench = false since round 14): the edge
+  /** ORACLE-TRUTH-ONLY face: the edge
     * list is [[Similarity.bruteForceKnn]] — all-pairs, O(n^2) by
     * construction (the r13 sf1 envelope measured exponent 1.62). Kept
     * registered because the EXACT kNN graph is the ground truth the
-    * approximate faces are judged against; the benched, scale-safe
+    * approximate faces are judged against; the scale-safe
     * face of the same [[graft.operators.Graph
     * .labelPropagationQuantized]] operator is [[g18_label_prop_lsh]],
     * whose edges come from constant-occupancy banded LSH. */
@@ -6844,8 +6807,7 @@ $langScoreCols
         .withColumnRenamed("node", "vec_id")
         .orderBy(col("vec_id"))
     },
-    Some(labelPropOracle(iters = 3)),
-    bench = false)
+    Some(labelPropOracle(iters = 3)))
 
   /** Exact oracle for g18: the auto-width LSH replay (d06's CTEs), the
     * verified pairs symmetrized into a weighted edge list, the node
@@ -6920,8 +6882,7 @@ $langScoreCols
         .withColumnRenamed("node", "vec_id")
         .orderBy(col("vec_id"))
     },
-    Some(g18Oracle(iters = 3)),
-    bench = true)
+    Some(g18Oracle(iters = 3)))
 
   /** Exact oracle for d10: DuckDB replays quantized k-means verbatim —
     * same 1e6 grid, integer distances via list_reduce, argmin with the
@@ -7011,8 +6972,7 @@ $langScoreCols
         .kmeansQuantized(Tables(s, dir).embeddings(fan = true),
           "vec_id", "embedding", k = 8, iters = 2)
         .orderBy(col("vec_id")),
-    Some(d10Oracle(k = 8, iters = 2, dims = 64)),
-    bench = true)
+    Some(d10Oracle(k = 8, iters = 2, dims = 64)))
 
   /** SemDeDup ([[graft.operators.Clustering.semDedup]]): k-means buckets
     * then within-cluster cosine pruning at tau — the published
@@ -7032,8 +6992,7 @@ $langScoreCols
         .semDedup(Tables(s, dir).embeddings(fan = true),
           "vec_id", "embedding", k = 8, iters = 2, tau = 0.3)
         .orderBy(col("vec_id")),
-    Some(d11Oracle(k = 8, iters = 2, dims = 64, tau = 0.3)),
-    bench = true)
+    Some(d11Oracle(k = 8, iters = 2, dims = 64, tau = 0.3)))
 
   /** Inverted-index build ([[graft.operators.Retrieval.invertedIndex]]):
     * per-term df/cf over the full corpus plus capped ascending-doc
@@ -7068,8 +7027,7 @@ $langScoreCols
         FROM capped WHERE rn <= 20 GROUP BY term)
       SELECT term, df, cf, postings
       FROM stats JOIN p USING (term)
-      WHERE df >= 5 ORDER BY term"""),
-    bench = true)
+      WHERE df >= 5 ORDER BY term"""))
 
   /** Vocabulary-driven BPE token counts — t05's missing half: pretokens
     * run through [[graft.operators.Bpe]]'s reference merge table, the
@@ -7086,8 +7044,7 @@ $langScoreCols
     Some(s"""
       WITH RECURSIVE
       ${graft.operators.Bpe.countsSqlCtes()}
-      SELECT doc_id, n_bpe_tokens FROM bpe_counts ORDER BY doc_id"""),
-    bench = true)
+      SELECT doc_id, n_bpe_tokens FROM bpe_counts ORDER BY doc_id"""))
 
   /** Fixed demonstration vocabulary for the WordPiece encoder (t32):
     * every lowercase letter in both word-initial and `##` continuation
@@ -7381,8 +7338,7 @@ $langScoreCols
              cast(unnest(range(len(syms))) AS int) AS tok_pos,
              unnest(syms) AS token
       FROM t20_doc_pt JOIN t20_enc USING (pt)
-      ORDER BY doc_id, pt_pos, tok_pos"""),
-    bench = true)
+      ORDER BY doc_id, pt_pos, tok_pos"""))
 
   /** Deterministic training corpus for t18 (small enough to embed as a
     * VALUES relation in the oracle, rich enough that 12 learned merges
@@ -7494,7 +7450,6 @@ $langScoreCols
         .orderBy(col("doc_id"))
     },
     None,
-    bench = true,
     oracleFn = Some { () =>
       // no stash = t22 filtered out of this Verify invocation; emit a
       // syntactically valid zero-weight placeholder (never compared —
@@ -7595,7 +7550,6 @@ $langScoreCols
         .orderBy(col("doc_id"))
     },
     None,
-    bench = true,
     oracleFn = Some { () =>
       s"""
       WITH RECURSIVE
@@ -7661,8 +7615,7 @@ $langScoreCols
              cast(coalesce(wfix, 0) AS DOUBLE) / 1000000.0 AS weight
       FROM documents d LEFT JOIN sc USING (doc_id)
       ORDER BY coalesce(wfix, 0) DESC, d.doc_id
-      LIMIT 100"""),
-    bench = true)
+      LIMIT 100"""))
 
   /** Deterministic epoch shuffle into training shards
     * ([[graft.operators.Sampling.shuffleShards]]): every document gets
@@ -7815,8 +7768,7 @@ $langScoreCols
       SELECT eval_id, n_shingles, n_seen,
              round(cast(n_seen AS DOUBLE) / n_shingles, 6) AS overlap_frac,
              n_seen * 1000000 >= 500000 * n_shingles AS contaminated
-      FROM agg ORDER BY eval_id"""),
-    bench = true)
+      FROM agg ORDER BY eval_id"""))
 
   /** Exact oracle for d15: the d03 minhash replay extended with a
     * (bands, offset, rows) configuration table, plus the exact
@@ -7909,8 +7861,7 @@ $langScoreCols
           shingleSize = 3, numHashes = 64,
           bandCounts = Seq(4, 8, 16), tau = 0.4)
         .orderBy(col("bands")),
-    Some(d15Oracle),
-    bench = true)
+    Some(d15Oracle))
 
   /** Duplicated-substring span profile ([[Dedup.duplicatedSpans]]):
     * stride-1 8-token windows, exact corpus-wide repeat detection,
@@ -7966,8 +7917,7 @@ $langScoreCols
       FROM base b
       LEFT JOIN dcnt d ON b.doc_id = d.doc_id
       LEFT JOIN agg a ON b.doc_id = a.doc_id
-      ORDER BY b.doc_id"""),
-    bench = true)
+      ORDER BY b.doc_id"""))
 
   /** Duplicated-span REMOVAL ([[Dedup.removeDuplicatedSpans]]): the
     * action d16 profiles — cut every repeated-window occurrence except

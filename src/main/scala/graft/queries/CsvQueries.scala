@@ -156,11 +156,7 @@ object CsvQueries {
     Some(s"""
       SELECT round(avg(point_latitude), 9) AS mean_lat,
              round(avg(point_longitude), 9) AS mean_lon
-      FROM read_csv('$fl2Csv', header=true)"""),
-    // the ONE directly baseline-comparable measurement: the reference's
-    // benchdemo (BASELINE.md: 0.37 s single-thread) is exactly this
-    // workload — infer + read FL2.csv, mean of two Double columns
-    bench = true)
+      FROM read_csv('$fl2Csv', header=true)"""))
 
   private val timestampFixturePath = "/tmp/graft_fixture_timestamps.csv"
 

@@ -44,8 +44,7 @@ object MultimodalQueries {
              sha256(text) AS digest_sha256,
              cast(list_sum(list_transform(string_split(text, ''), c -> ascii(c))) as bigint) AS byte_sum,
              length(list_distinct(list_transform(string_split(text, ''), c -> ascii(c)))) AS distinct_bytes
-      FROM documents ORDER BY doc_id"""),
-    bench = true)
+      FROM documents ORDER BY doc_id"""))
 
   val m02_blob_features = QueryDef(
     "m02_blob_features",
@@ -76,8 +75,7 @@ object MultimodalQueries {
             (len(list_filter(bs, x -> x = v)) * 1.0 / n)
             * log2(len(list_filter(bs, x -> x = v)) * 1.0 / n))), 6) AS entropy,
         array_to_string(list_transform(range(16), bin -> len(list_filter(bs, x -> x // 16 = bin))), ',') AS histogram
-      FROM c ORDER BY doc_id"""),
-    bench = true)
+      FROM c ORDER BY doc_id"""))
 
   /** Exact oracle: recomputes every evenly-spaced window's XXH64 in
     * DuckDB ([[OracleSql]] emulation) with the same offset arithmetic as
@@ -119,8 +117,7 @@ object MultimodalQueries {
       Multimodal
         .frameSample(blobs(s, dir), "doc_id", "blob", n = 8, frameBytes = 64)
         .orderBy(col("doc_id"), col("frame_idx")),
-    Some(m03Oracle),
-    bench = true)
+    Some(m03Oracle))
 
   /** REAL image decode pipeline (round 10 — the r9 judge ask): each doc_id
     * becomes a genuine PNG ([[Multimodal.syntheticPng]] — a w×h gradient
@@ -355,8 +352,7 @@ object MultimodalQueries {
     (s, dir) =>
       Multimodal.cdcDedupStats(blobs(s, dir), "doc_id", "blob",
         window = 8, maskBits = 5),
-    Some(m07Oracle),
-    bench = true)
+    Some(m07Oracle))
 
   /** Multi-codec decode matrix + the corrupt-blob contract (round 11 —
     * m04 exercised only JDK-synthesized PNGs): each doc_id becomes one
@@ -616,8 +612,7 @@ object MultimodalQueries {
         windowSamples = 64, silenceThreshold = 32)
         .orderBy(col("doc_id"), col("win"))
     },
-    Some(m11Oracle),
-    bench = true)
+    Some(m11Oracle))
 
   val all: Seq[QueryDef] = Seq(
     m01_blob_meta, m02_blob_features, m03_frame_sample, m04_decode_resize,

@@ -9,8 +9,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * accumulates floating aggregates so the driver's value-hash compare is
   * reproducible across engines and partitionings (double addition is not
   * associative; decimal accumulation is — see Aggregates.sumExact).
-  *
-  * `bench = true` marks the headline queries timed by `graft.Bench`.
   */
 /** `oracleFn` is the LAZY alternative to `oracle`, for the rare query
   * whose oracle SQL depends on run-time state (t19 embeds a merge table
@@ -20,5 +18,4 @@ final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    bench: Boolean = false,
     oracleFn: Option[() => String] = None)

@@ -68,8 +68,7 @@ object Relational {
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '2000-01-01 00:00:00'
       GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus"""),
-    bench = true)
+      ORDER BY l_returnflag, l_linestatus"""))
 
   val q02_filter_project = QueryDef(
     "q02_filter_project",
@@ -93,8 +92,7 @@ object Relational {
         AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
         AND l_discount BETWEEN 0.03 AND 0.08
         AND l_quantity < 30
-      ORDER BY l_orderkey, l_linenumber"""),
-    bench = true)
+      ORDER BY l_orderkey, l_linenumber"""))
 
   val q03_join_inner = QueryDef(
     "q03_join_inner",
@@ -111,8 +109,7 @@ object Relational {
       SELECT l.l_partkey, l.l_orderkey, l.l_linenumber, l.l_extendedprice,
              p.p_brand, p.p_retailprice
       FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-      ORDER BY l.l_orderkey, l.l_linenumber"""),
-    bench = true)
+      ORDER BY l.l_orderkey, l.l_linenumber"""))
 
   val q04_join_left = QueryDef(
     "q04_join_left",
@@ -201,8 +198,7 @@ object Relational {
         SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
         UNION ALL
         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem)
-      ORDER BY l_orderkey, l_linenumber, variable"""),
-    bench = true)
+      ORDER BY l_orderkey, l_linenumber, variable"""))
 
   val q09_topk = QueryDef(
     "q09_topk",
@@ -271,8 +267,7 @@ object Relational {
                AS running_total
       FROM orders
       WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-      ORDER BY o_custkey, order_seq"""),
-    bench = true)
+      ORDER BY o_custkey, order_seq"""))
 
   val q13_rollup = QueryDef(
     "q13_rollup",
@@ -401,8 +396,7 @@ object Relational {
         AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
         AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
       GROUP BY n_name
-      ORDER BY n_name"""),
-    bench = true)
+      ORDER BY n_name"""))
 
   val q18_pivot = QueryDef(
     "q18_pivot",
@@ -490,8 +484,7 @@ object Relational {
              round(${sumExactSql("l_discount")} / count(*), 6) AS avg_l_discount,
              min(l_discount) AS min_l_discount, max(l_discount) AS max_l_discount,
              count(*) AS n_rows
-      FROM lineitem"""),
-    bench = true)
+      FROM lineitem"""))
 
   val q23_events_window = QueryDef(
     "q23_events_window",
@@ -507,8 +500,7 @@ object Relational {
     Some(s"""
       SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
              ${sumExactSql("value")} AS sum_value
-      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
-    bench = true)
+      FROM events GROUP BY 1, 2 ORDER BY 1, 2"""))
 
   val q24_json_extract = QueryDef(
     "q24_json_extract",
@@ -637,8 +629,7 @@ object Relational {
              user_id, count(*) AS n_events,
              cast(sum(cast(value as decimal(28,6))) as double) AS total_value
       FROM sess GROUP BY user_id, sid
-      ORDER BY user_id, session_start"""),
-    bench = true)
+      ORDER BY user_id, session_start"""))
 
   /** Custom typed fold (the reference's Control.Foldl extension point,
     * SURVEY §2.9) driven through the Dataset API: per-group count +
@@ -698,8 +689,7 @@ object Relational {
              round(p.purchase_value, 6) AS purchase_value
       FROM clicks c ASOF LEFT JOIN purch p
         ON c.user_id = p.user_id AND c.ts >= p.ts
-      ORDER BY c.event_id"""),
-    bench = true)
+      ORDER BY c.event_id"""))
 
   /** Keyless range join via bin-explode equi-join (Joins.intervalJoin):
     * events matched to 30 daily maintenance windows. A raw BETWEEN join
@@ -811,8 +801,7 @@ object Relational {
       FROM events WHERE user_id < 100
       WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
                    RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)
-      ORDER BY user_id, event_id"""),
-    bench = true)
+      ORDER BY user_id, event_id"""))
 
   /** Deterministic stratified sampling — per-group quota by a pseudo-
     * random but engine-portable permutation (Knuth multiplicative hash of
@@ -1203,8 +1192,7 @@ object Relational {
         .orderBy(col("est_cnt").desc, col("suppkey"))
         .limit(25)
     },
-    Some(q54Oracle),
-    bench = true)
+    Some(q54Oracle))
 
   /** Bloom-pruned fact-to-dim join (explicit runtime filter): the
     * filtered orders slice (~1% of orders) builds a Bloom filter whose
@@ -1237,8 +1225,7 @@ object Relational {
       FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
       WHERE o.o_orderdate >= TIMESTAMP '1995-03-01 00:00:00'
         AND o.o_orderdate < TIMESTAMP '1995-04-01 00:00:00'
-      GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority"""),
-    bench = true)
+      GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority"""))
 
   /** Exact oracle for the Z-order layout key: DuckDB recomputes the
     * linear min/max bin (pure integer `//`) and the 12-bit interleave as
@@ -1283,8 +1270,7 @@ object Relational {
         .orderBy(col("z"), col("l_partkey"), col("l_suppkey"))
         .limit(200)
     },
-    Some(q56Oracle),
-    bench = true)
+    Some(q56Oracle))
 
   /** CDC merge ([[Incremental.mergeLatest]]), exercised INCREMENTALLY:
     * the events log is split at a watermark; the pre-split history folds
@@ -1320,8 +1306,7 @@ object Relational {
               PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
             FROM events)
       WHERE rn = 1 AND event_type <> 'error'
-      ORDER BY user_id"""),
-    bench = true)
+      ORDER BY user_id"""))
 
   /** SCD2 history build ([[Incremental.scd2]]): each user's event_type
     * stream collapses into validity intervals — one row per run of equal
@@ -1400,8 +1385,7 @@ object Relational {
                PARTITION BY user_id ORDER BY hour
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sum_value,
              coalesce(n_events, 0) AS n_events, is_observed
-      FROM j ORDER BY user_id, hour"""),
-    bench = true)
+      FROM j ORDER BY user_id, hour"""))
 
   /** Blocked fuzzy join ([[Joins.fuzzySelfJoin]]): spelling-variant
     * pairs among the distinct part names within edit distance 2,
@@ -1546,8 +1530,7 @@ object Relational {
         WHERE ${cols.map(c => s"$c IS NOT NULL").mkString(" AND ")})
       ${rows.mkString(" UNION ALL ")}
       ORDER BY col_x, col_y"""
-    },
-    bench = true)
+    })
 
   /** Equi-width histogram ([[graft.operators.Profile.histogram]]): the
     * distribution half of the ingest profile — broadcast min/max bounds,
@@ -2234,8 +2217,7 @@ object Relational {
              END AS ks_d,
              CASE WHEN n0 > 0 AND n1 > 0 THEN ks_at END AS ks_at
       FROM q83_m m JOIN q83_at a ON m.g = a.g
-      ORDER BY event_type"""),
-    bench = true)
+      ORDER BY event_type"""))
 
   /** Funnel time-to-convert ([[graft.operators.Funnel.funnelLags]]):
     * mean/median/p90 lag per adjacent step transition over the same
@@ -2372,8 +2354,7 @@ object Relational {
       JOIN q86_it na ON na.i = item_a
       JOIN q86_it nbi ON nbi.i = item_b
       CROSS JOIN q86_n
-      ORDER BY lift DESC, item_a, item_b LIMIT 40"""),
-    bench = true)
+      ORDER BY lift DESC, item_a, item_b LIMIT 40"""))
 
   /** Session-scoped Markov transition matrix ([[graft.operators.Funnel
     * .transitionMatrix]]): the flow-analysis readout between q79's
@@ -2424,8 +2405,7 @@ object Relational {
       SELECT from_state, to_state, n,
              cast(n * 1000000 // tot AS BIGINT) AS p_q
       FROM q87_c JOIN q87_t USING (from_state)
-      ORDER BY from_state, to_state"""),
-    bench = true)
+      ORDER BY from_state, to_state"""))
 
   /** Top session paths ([[graft.operators.Funnel.topPaths]]): the
     * most frequent user journeys — each gap session rendered as its

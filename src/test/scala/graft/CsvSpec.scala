@@ -14,7 +14,9 @@ import graft.sources.Csv.{NoQuoting, ParserOptions, RFC4180Quoting}
   * src/test/resources/frames (`fixture`); the real datasets (prestige*,
   * mpg, issue114, FL2) are read in place from /root/reference/test/data
   * and /root/reference/data, and their tests cancel where that data is
-  * absent (`requireFile`, FIXTURES.md). */
+  * absent (`requireFile`, FIXTURES.md). The parse features those tests
+  * check are also checked on small hand-made fixtures of the same shape,
+  * which always run. */
 class CsvSpec extends SparkSpec {
 
   private val data = "/root/reference/test/data"
@@ -109,6 +111,83 @@ class CsvSpec extends SparkSpec {
     assert(maybe.count() == 4)
     val strict = Csv.readTable(spark, f.getAbsolutePath)
     assert(strict.count() == 3) // row 2 dropped, rows 3-4 kept
+  }
+
+  // ------- reference-data features on hand-made fixtures (FIXTURES.md) -------
+
+  test("quoted mid-file field holding the separator and a doubled quote (issue114 shape)") {
+    val path = fixture("quotedFields.csv")
+    assert(Csv.inferSchema(path).map(c => c.name -> c.sparkType) == Seq(
+      "id" -> LongType, "facility_name" -> StringType, "owner" -> StringType,
+      "wells" -> LongType))
+    for (df <- Seq(Csv.readTable(spark, path), Csv.readTableMaybe(spark, path))) {
+      val rows = df.orderBy("id").collect()
+      assert(rows.map(_.getString(1)).toSeq ==
+        Seq("TIMBERLINE ENERGY INC", "MUSSER, B W \"B\"", "PLAIN NAME"))
+      assert(rows.map(_.getString(2)).toSeq ==
+        Seq("LILLIAN B. SMITH, ET AL", "BOYD", "O\"NEIL, PAT"))
+      assert(rows.map(_.getLong(3)).sum == 15L)
+    }
+  }
+
+  test("an empty header name is read as _c0 (prestige shape)") {
+    val path = fixture("emptyHeader.csv")
+    assert(Csv.inferSchema(path).map(c => c.name -> c.sparkType) == Seq(
+      "_c0" -> StringType, "education" -> DoubleType, "income" -> LongType))
+    val df = Csv.readTable(spark, path)
+    assert(df.columns.toSeq == Seq("_c0", "education", "income"))
+    assert(df.select(col("_c0")).collect().map(_.getString(0)).toSet ==
+      Set("gov.administrators", "general.managers", "accountants"))
+    assert(df.agg(sum(col("income"))).head().getLong(0) == 47501L)
+  }
+
+  test("NA and blank typed cells: strict reads drop the row, maybe reads keep null (prestigePartial shape)") {
+    val path = fixture("partial.csv")
+    val cols = Csv.inferSchema(path)
+    assert(cols.map(c => c.name -> c.sparkType) == Seq(
+      "job" -> StringType, "income" -> LongType, "prestige" -> DoubleType,
+      "type" -> StringType))
+    assert(cols(1).nullable && cols(2).nullable)
+
+    val strict = Csv.readTable(spark, path).orderBy("job").collect()
+    assert(strict.map(_.getString(0)).toSeq == Seq("a", "d"))
+    assert(strict.map(_.getLong(1)).sum == 600L)
+
+    val maybe = Csv.readTableMaybe(spark, path)
+    assert(maybe.count() == 6)
+    val r = maybe.filter(col("prestige").isNull).agg(count(lit(1)), avg(col("income"))).head()
+    assert(r.getLong(0) == 4L)
+    assert(math.abs(r.getDouble(1) - 300.0) < eps)
+    val byJob = maybe.collect().map(row => row.getString(0) -> row).toMap
+    assert(byJob("f").isNullAt(1))
+    // NA is a missing marker for typed columns only; Text keeps the cell
+    assert(byJob("b").getString(3) == "NA")
+  }
+
+  test("header override on a headerless file reads the first line as data (prestigeNoHeader shape)") {
+    val df = Csv.readTable(
+      spark, fixture("noHeader.csv"),
+      ParserOptions(headerOverride = Some(Seq("Job", "Schooling", "Money"))))
+    assert(df.schema.map(f => f.name -> f.dataType) == Seq(
+      "Job" -> StringType, "Schooling" -> DoubleType, "Money" -> LongType))
+    assert(df.count() == 3)
+    assert(df.agg(sum(col("Money"))).head().getLong(0) == 47501L)
+    // the same rows as emptyHeader.csv: the ratio is equal with and without header
+    val noHeader = df.agg(avg(col("Money") / col("Schooling"))).head().getDouble(0)
+    val withHeader = Csv.readTable(spark, fixture("emptyHeader.csv"))
+      .agg(avg(col("income") / col("education"))).head().getDouble(0)
+    assert(math.abs(noHeader - 1259.650661366581) < eps)
+    assert(math.abs(withHeader - noHeader) < eps)
+  }
+
+  test("readTableDebug: _failed_columns names each dropped row's failing columns") {
+    val res = Csv.readTableDebug(spark, fixture("partial.csv"))
+    assert(res.rows.orderBy("job").collect().map(_.getString(0)).toSeq == Seq("a", "d"))
+    val failed = res.corrupt.collect().map(r =>
+      r.getString(r.fieldIndex("job")) -> r.getSeq[String](r.fieldIndex("_failed_columns"))).toMap
+    assert(failed == Map(
+      "b" -> Seq("prestige"), "c" -> Seq("prestige"), "e" -> Seq("prestige"),
+      "f" -> Seq("income", "prestige")))
   }
 
   // ---------------- parse quirks through the reader ----------------

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import graft.queries.{Corpus, Relational}
 
-/** Plan-shape regression tests: the SCALE.md claims, asserted. These pin
-  * the properties that make the plans survive a 100-1000x scale-up —
-  * filters reaching the parquet scan, projection pruning, no cartesian
-  * products, partial aggregation before exchanges, broadcast dimensions —
+/** Plan-shape regression tests. These pin the properties that make the
+  * plans survive a 100-1000x scale-up — filters reaching the parquet
+  * scan, projection pruning, no cartesian products, partial aggregation
+  * before exchanges, broadcast dimensions —
   * so a refactor that silently loses one fails CI, not the cluster. */
 class PlanSpec extends SparkSpec {
 

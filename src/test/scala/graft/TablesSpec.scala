@@ -59,6 +59,25 @@ class TablesSpec extends SparkSpec {
     withConf(key -> "true")(assert(inferenceStages(spark, dir) == 0))
   }
 
+  test("the listing of a partitioned table equals listFiles(path, recursive = true)") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("graft-tables-listing").resolve("t.parquet").toString
+    (0L until 40L).map(i => (i, i % 3, i % 2 == 0)).toDF("id", "a", "b")
+      .repartition(2).write.partitionBy("a", "b").parquet(path)
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val it = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(hp, true)
+    val expected = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      expected += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    val want = expected.result().sortBy(_._1)
+    // two levels of partition directories, a data file in each leaf
+    assert(want.count(_._1.contains("/a=1/b=true/")) >= 1, want.mkString("\n"))
+    assert(want.exists(_._1.endsWith("_SUCCESS")))
+    assert(Tables.listing(spark, path) == want)
+  }
+
   test("the schema cache does not keep a dropped session alive") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-tables-gc").toString

@@ -35,8 +35,8 @@ def canon(rel):
 def main(sfdir, outdir):
     con = duckdb.connect()
     for t in TABLES:
-        # driver testdata is one file per table; ScaleProbe's sf1 corpus
-        # is Spark-written (a directory of part files) — glob those
+        # driver testdata is one file per table; a Spark-written table
+        # is a directory of part files — glob those
         path = f"{sfdir}/{t}.parquet"
         if os.path.isdir(path):
             path = f"{path}/*.parquet"
