@@ -41,9 +41,12 @@ import org.apache.spark.sql.functions._
   */
 object ChaosCheck {
   def main(args: Array[String]): Unit = {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-chaos-ckpt")
-    val warehouse = java.nio.file.Files
-      .createTempDirectory("graft-chaos-wh")
+    // every directory of the run lives under one root, deleted at the end
+    val root = java.nio.file.Files.createTempDirectory("graft-chaos")
+    def tempDir(prefix: String): java.nio.file.Path =
+      java.nio.file.Files.createTempDirectory(root, prefix)
+    val ckpt = tempDir("ckpt")
+    val warehouse = tempDir("wh")
     // executor JVMs need the same JDK17 module opens the driver gets from
     // build.sbt; they inherit this JVM's classpath via the worker's
     // command builder, but javaOptions do NOT propagate
@@ -68,19 +71,23 @@ object ChaosCheck {
       .config("spark.executor.extraClassPath", sys.props("java.class.path"))
       .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
-    try {
-      val sc = spark.sparkContext
-      sc.setLogLevel("ERROR")
-      sc.setCheckpointDir(ckpt.toString)
-      // wait for both executors (driver also lists itself)
-      val deadline = System.nanoTime() + 120L * 1000000000L
-      while (sc.statusTracker.getExecutorInfos.length < 3 &&
-          System.nanoTime() < deadline) Thread.sleep(500)
-      if (sc.statusTracker.getExecutorInfos.length < 3) {
-        println("""{"pass":false,"reason":"cluster never reached 2 executors"}""")
-        sys.exit(2)
-      }
-
+    def cleanUp(): Unit = {
+      spark.stop()
+      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile): Unit
+    }
+    val sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    sc.setCheckpointDir(ckpt.toString)
+    // wait for both executors (driver also lists itself)
+    val deadline = System.nanoTime() + 120L * 1000000000L
+    while (sc.statusTracker.getExecutorInfos.length < 3 &&
+        System.nanoTime() < deadline) Thread.sleep(500)
+    if (sc.statusTracker.getExecutorInfos.length < 3) {
+      println("""{"pass":false,"reason":"cluster never reached 2 executors"}""")
+      cleanUp()
+      sys.exit(2)
+    }
+    val passed = try {
       // deterministic, fully recomputable edge list (no cached source to
       // lose): 300 nodes, two arithmetic out-edges each + a hub
       val edges = spark.range(0L, 300L).toDF("src")
@@ -158,8 +165,7 @@ object ChaosCheck {
       // spec-level replay simulation (StreamingSpec) models; here the
       // loss is a real JVM halt on a real two-executor cluster.
       import spark.implicits._
-      def newKillFile(): String = java.nio.file.Files
-        .createTempDirectory("graft-chaos-ingest").resolve("killed").toString
+      def newKillFile(): String = tempDir("ingest").resolve("killed").toString
       val killFile = newKillFile()
       // one halt total PER DRILL, wherever the first task to see no
       // marker runs: createFile is the atomic claim; the loser of the
@@ -213,10 +219,8 @@ object ChaosCheck {
           .sortBy(_.mkString("|"))
         (classed, index)
       }
-      val chaosTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-ded").toString
-      val refTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-dedref").toString
+      val chaosTgt = tempDir("ded").toString
+      val refTgt = tempDir("dedref").toString
       val (chaosClass, chaosIdx) = runIngest("chaos_ded", chaosTgt, chaosBatch)
       val ingKilled = java.nio.file.Files
         .exists(java.nio.file.Paths.get(killFile))
@@ -269,10 +273,8 @@ object ChaosCheck {
         (collectAll(graft.streaming.EventStreams.committedBatches(spark, target)),
           collectAll(spark.table(table)))
       }
-      val ivfChaosTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-ivf").toString
-      val ivfRefTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-ivfref").toString
+      val ivfChaosTgt = tempDir("ivf").toString
+      val ivfRefTgt = tempDir("ivfref").toString
       val (ivfChaosClass, ivfChaosIdx) =
         runIvfIngest("chaos_ivf", ivfChaosTgt, chaosVecBatch)
       val ivfKilled = java.nio.file.Files
@@ -311,10 +313,8 @@ object ChaosCheck {
         (collectAll(graft.streaming.EventStreams.committedBatches(spark, target)),
           collectAll(spark.table(s"${table}_spans")))
       }
-      val spanChaosTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-span").toString
-      val spanRefTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-spanref").toString
+      val spanChaosTgt = tempDir("span").toString
+      val spanRefTgt = tempDir("spanref").toString
       val (spanChaosClass, spanChaosIdx) = runSpanIngest(
         "chaos_span", spanChaosTgt, rows => chaosTextBatch(spanKillFile, rows))
       val spanKilled = java.nio.file.Files
@@ -375,10 +375,8 @@ object ChaosCheck {
           .snapshotAsOf(spark, target, 1L).map(liveOf)
         (live, asOf1)
       }
-      val upsChaosTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-ups").toString
-      val upsRefTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-upsref").toString
+      val upsChaosTgt = tempDir("ups").toString
+      val upsRefTgt = tempDir("upsref").toString
       val (upsChaosLive, upsChaosAsOf1) = runUpsertStore(upsChaosTgt, chaosCdcBatch)
       val upsKilled = java.nio.file.Files
         .exists(java.nio.file.Paths.get(upsKillFile))
@@ -471,10 +469,8 @@ object ChaosCheck {
           .sorted
         (hookFired, before, mid, after, names)
       }
-      val logChaosTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-blog").toString
-      val logRefTgt = java.nio.file.Files
-        .createTempDirectory("graft-chaos-blogref").toString
+      val logChaosTgt = tempDir("blog").toString
+      val logRefTgt = tempDir("blogref").toString
       val (logHook, logBefore, logMid, logAfter, logNames) =
         runBatchLog(logChaosTgt, crashFirst = true)
       val (_, refBefore, refMid, refAfter, refNames) =
@@ -502,8 +498,7 @@ object ChaosCheck {
       // and a re-run must overwrite the partial dir and converge to
       // the clean-run state.
       def buildVacStore(): String = {
-        val t = java.nio.file.Files
-          .createTempDirectory("graft-chaos-vac").toString
+        val t = tempDir("vac").toString
         def step(b: DataFrame, id: Long) = graft.streaming.EventStreams
           .upsertStep(b, id, t, Seq("id"), Seq("seq"), isDel)
         step(cdcDf(cdc0), 0L); step(cdcDf(cdc1), 1L); step(cdcDf(cdc2), 2L)
@@ -583,15 +578,8 @@ object ChaosCheck {
       val pass =
         prPass && ccPass && ingPass && ivfPass && spanPass && cdcPass && vacPass
       println(s"""{"pass":$pass,"pagerank":{"pass":$prPass,"rounds":$prRounds,"killed":$prKilled,"nodes":${base.size}},"cc":{"pass":$ccPass,"cuts":$ccRounds,"killed":$ccKilled,"nodes":${ccBase.size}},"ingest":{"pass":$ingPass,"killed":$ingKilled,"classified":${chaosClass.size},"index_rows":${chaosIdx.size}},"ivf_ingest":{"pass":$ivfPass,"killed":$ivfKilled,"classified":${ivfChaosClass.size},"index_rows":${ivfChaosIdx.size}},"span_ingest":{"pass":$spanPass,"killed":$spanKilled,"classified":${spanChaosClass.size},"index_rows":${spanChaosIdx.size}},"cdc_store":{"pass":$cdcPass,"killed":$upsKilled,"snap_hook":$snapHookFired,"log_hook":$logHook,"live_pinned":$livePinned,"upsert_pass":$upsPass,"batchlog_pass":$logPass,"live_rows":${upsChaosLive.size},"log_rows":${logAfter.size}},"vacuum":{"pass":$vacPass,"held_lazy_failed":$heldLazyFailed,"asof_pruned":${asOf0Vacuumed.isEmpty},"marker_hook":$markerHookFired,"marker_served_base":$midMarkerIsBase}}""")
-      if (!pass) sys.exit(1)
-    } finally {
-      spark.stop()
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(ckpt.toFile)
-      rm(warehouse.toFile)
-    }
+      pass
+    } finally cleanUp()
+    if (!passed) sys.exit(1)
   }
 }

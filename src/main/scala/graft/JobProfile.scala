@@ -28,18 +28,27 @@ object JobProfile {
     // thread, and a plain captured Boolean has no JMM visibility guarantee
     // there (the listener could never observe the flip)
     val enabled = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // bumped by every callback, so the poll below sees a job's end, which
+    // updates its record without changing the map's size
+    val events = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (enabled.get) {
-        val r = JobRec(
-          Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(""),
-          e.time, 0L, e.stageIds.map(_.toInt))
-        jobs.synchronized { jobs(e.jobId) = r }
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        events.incrementAndGet()
+        if (enabled.get) {
+          val r = JobRec(
+            Option(e.properties)
+              .flatMap(p => Option(p.getProperty("spark.job.description")))
+              .getOrElse(""),
+            e.time, 0L, e.stageIds.map(_.toInt))
+          jobs.synchronized { jobs(e.jobId) = r }
+        }
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         jobs.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        events.incrementAndGet(): Unit
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        events.incrementAndGet()
         if (enabled.get) {
           val si = e.stageInfo
           val m = si.taskMetrics
@@ -53,6 +62,7 @@ object JobProfile {
               si.name)
           }
         }
+      }
     }
     spark.sparkContext.addSparkListener(listener)
 
@@ -68,17 +78,17 @@ object JobProfile {
       q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
       val total = (System.nanoTime() - t0) / 1e9
       enabled.set(false)
-      // listener bus is async; poll until the event maps go quiet
-      // (two consecutive identical samples) instead of a fixed sleep
-      // that can under-wait on a loaded bus — bounded at 2 s
-      var prevCounts = (-1, -1)
+      // listener bus is async; poll until no callback arrived between
+      // two samples and every recorded job has ended, instead of a fixed
+      // sleep that can under-wait on a loaded bus — bounded at 2 s
+      var prev = -1L
       var quiet = false
       var spins = 0
       while (!quiet && spins < 40) {
         Thread.sleep(50)
-        val now = (jobs.synchronized(jobs.size), stages.synchronized(stages.size))
-        quiet = now == prevCounts
-        prevCounts = now
+        val now = events.get
+        quiet = now == prev && jobs.synchronized(jobs.values.forall(_.end != 0L))
+        prev = now
         spins += 1
       }
       println(f"\n=== ${q.name} warm total ${total}%.3f s, ${jobs.size} jobs ===")

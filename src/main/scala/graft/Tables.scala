@@ -37,10 +37,10 @@ final case class Tables(spark: SparkSession, dir: String) {
     * explicit order columns).
     */
   private def fanOut(name: String, key: String): DataFrame = {
-    val (df, bytes) = Tables.scan(spark, s"$dir/$name.parquet")
+    val (df, files) = Tables.scan(spark, s"$dir/$name.parquet")
     val cores = spark.sparkContext.defaultParallelism
-    // unknown size (the listing failed): treat as at-scale, no fan-out
-    if (bytes.forall(Tables.scanSplits(spark, _) >= cores)) df
+    // unknown layout (the listing failed): treat as at-scale, no fan-out
+    if (files.forall(Tables.filePartitions(spark, _) >= cores)) df
     else df.repartition(cores, col(key))
   }
   def region: DataFrame = t("region")
@@ -182,16 +182,16 @@ object Tables {
     walk(hp).sortBy(_._1)
   }
 
-  /** The parquet table at `path` as a lazy scan, and its input bytes.
+  /** The parquet table at `path` as a lazy scan, and its file listing.
     *
     * The schema is inferred once per (session, path, listing, inference
     * settings) and later scans read with `spark.read.schema(...)`, which
     * runs no footer-inference job (Frames' `tableTypes`: infer once,
     * reuse). The listing is taken on every call, so a table rewritten in
-    * place is inferred again, never served a stale schema; the byte total
-    * comes from the same listing. If the listing fails, the scan falls
-    * back to plain inference and the size is unknown (None). */
-  private[graft] def scan(spark: SparkSession, path: String): (DataFrame, Option[Long]) = {
+    * place is inferred again, never served a stale schema; the fan-out
+    * estimate comes from the same listing. If the listing fails, the scan
+    * falls back to plain inference and the listing is unknown (None). */
+  private[graft] def scan(spark: SparkSession, path: String): (DataFrame, Option[Listing]) = {
     val files =
       try listing(spark, path)
       catch {
@@ -211,21 +211,48 @@ object Tables {
         perSession.put(key, (files, inferred.schema))
         inferred
     }
-    (df, Some(files.map(_._2).sum))
+    (df, Some(files))
   }
 
-  /** Estimated scan-split count for a table of `bytes` input bytes:
-    * bytes over `spark.sql.files.maxPartitionBytes` — the same quantity
-    * Spark's file source uses to slice a scan, minus the open-cost
-    * refinement (irrelevant for the single-file test tables and an
-    * underestimate never flips the fan-out the wrong way: fewer estimated
-    * splits only widens a scan that was already narrow). */
+  private def bytesConf(spark: SparkSession, key: String, default: String): Long =
+    org.apache.spark.network.util.JavaUtils.byteStringAsBytes(spark.conf.get(key, default))
+
+  /** Pieces of one file of `bytes` input bytes cut at
+    * `spark.sql.files.maxPartitionBytes`: bytes over that size, at least 1. */
   private[graft] def scanSplits(spark: SparkSession, bytes: Long): Long = {
-    val maxSplit =
-      try org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-          .stripSuffix("b"))
-      catch { case _: Throwable => 134217728L }
+    val maxSplit = bytesConf(spark, "spark.sql.files.maxPartitionBytes", "128m")
     math.max(1L, (bytes + maxSplit - 1) / maxSplit)
+  }
+
+  /** Estimated scan splits of the table listed as `files`, packed as
+    * Spark's `FilePartition` packs a file scan: the split size is
+    * `maxPartitionBytes` lowered to the bytes per core (each file counted
+    * with `openCostInBytes`) but not below the open cost, and the pieces,
+    * largest first, fill splits next-fit, each adding the open cost; so
+    * each of a few small files is a split of its own. Unlike Spark, files
+    * are cut only at `maxPartitionBytes` ([[scanSplits]]): a parquet file
+    * reads in parallel per row group (128 MB by default), so a small
+    * single-file table stays one split. Hidden and empty files are skipped. */
+  private[graft] def filePartitions(spark: SparkSession, files: Listing): Long = {
+    val lengths = files.collect { case (p, len, _)
+      if len > 0 && !Seq("_", ".").exists(new org.apache.hadoop.fs.Path(p).getName.startsWith) => len }
+    val maxSplit = bytesConf(spark, "spark.sql.files.maxPartitionBytes", "128m")
+    val openCost = bytesConf(spark, "spark.sql.files.openCostInBytes", "4m")
+    val minPartitions =
+      Seq("spark.sql.files.minPartitionNum", "spark.sql.leafNodeDefaultParallelism")
+        .flatMap(spark.conf.getOption).headOption.map(_.toLong)
+        .getOrElse(spark.sparkContext.defaultParallelism.toLong)
+    val splitBytes = math.min(
+      maxSplit, math.max(openCost, lengths.map(_ + openCost).sum / minPartitions))
+    val pieces = lengths.flatMap { len =>
+      Seq.tabulate(scanSplits(spark, len).toInt)(i => math.min(maxSplit, len - i * maxSplit))
+    }.sorted(Ordering[Long].reverse)
+    var closed = 0L
+    var current = 0L // bytes in the open split, 0 when none is open
+    pieces.foreach { piece =>
+      if (current > 0 && current + piece > splitBytes) { closed += 1; current = 0L }
+      current += piece + openCost
+    }
+    closed + (if (current > 0) 1 else 0)
   }
 }

@@ -12,10 +12,12 @@ import graft.sources.Csv.ParserOptions
   * and replicates the reference parse semantics in portable SQL, so the
   * hash compare exercises tokenizer + inference + cast plan end-to-end.
   *
-  * Fixture files are the reference's own test corpus (read-only, at
+  * Most fixture files are the reference's own test corpus (read-only, at
   * /root/reference/test/data — FIXTURES.md), the source of the published
   * golden values these queries anchor to. That corpus is not part of this
-  * repository; [[externalInputs]] names each query that reads it.
+  * repository; [[externalInputs]] names each query that reads it. The
+  * repository holds its own copies of two small fixtures (`managers.csv`,
+  * `catSmall.csv`, resources under `frames/`), which q30 and q32 read.
   */
 object CsvQueries {
 
@@ -27,10 +29,20 @@ object CsvQueries {
   val externalInputs: Map[String, String] = Map(
     "q28_csv_strict" -> s"$refData/prestigePartial.csv",
     "q29_csv_maybe" -> s"$refData/prestigePartial.csv",
-    "q30_csv_managers" -> s"$refData/managers.csv",
     "q31_csv_noheader" -> s"$refData/prestigeNoHeader.csv",
-    "q32_csv_categorical" -> s"$refData/catSmall.csv",
     "q33_csv_fl2_means" -> fl2Csv)
+
+  private def fixturePath(name: String): String = s"/tmp/graft_fixture_$name"
+
+  /** Copies the repo-owned fixture `frames/<name>` from the class path to
+    * [[fixturePath]], which the DuckDB oracle reads. */
+  private def resourceFixture(name: String): String = {
+    val in = getClass.getResourceAsStream(s"/frames/$name")
+    try java.nio.file.Files.copy(in, java.nio.file.Paths.get(fixturePath(name)),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    finally in.close()
+    fixturePath(name)
+  }
 
   /** DuckDB-side replicas of the reference parse semantics
     * (ColumnTypeable.hs:61-80), matching graft.functions.Parsing. */
@@ -88,12 +100,12 @@ object CsvQueries {
   val q30_csv_managers = QueryDef(
     "q30_csv_managers",
     (s, _) =>
-      Csv.readTable(s, s"$refData/managers.csv")
+      Csv.readTable(s, resourceFixture("managers.csv"))
         .orderBy(col("id")),
     Some(s"""
       SELECT ${sqlInt("id")} AS id, manager, ${sqlInt("age")} AS age,
              ${sqlDouble("pay")} AS pay
-      FROM read_csv('$refData/managers.csv', header=true,
+      FROM read_csv('${fixturePath("managers.csv")}', header=true,
                     names=['id','manager','age','pay'], all_varchar=true)
       WHERE ${sqlIntOk("id")} AND ${sqlIntOk("age")} AND ${sqlDoubleOk("pay")}
       ORDER BY id"""))
@@ -124,7 +136,7 @@ object CsvQueries {
   val q32_csv_categorical = QueryDef(
     "q32_csv_categorical",
     (s, _) => {
-      val df = Csv.readTable(s, s"$refData/catSmall.csv")
+      val df = Csv.readTable(s, resourceFixture("catSmall.csv"))
       Categorical.encode(df, "month")
         .select(col("id"), col("month"), col("month_code"))
         .orderBy(col("id"))
@@ -134,7 +146,7 @@ object CsvQueries {
              CASE month WHEN 'April' THEN 0 WHEN 'February' THEN 1
                         WHEN 'January' THEN 2 WHEN 'March' THEN 3
                         WHEN 'May' THEN 4 END AS month_code
-      FROM read_csv('$refData/catSmall.csv', header=true,
+      FROM read_csv('${fixturePath("catSmall.csv")}', header=true,
                     names=['id','month'], all_varchar=true)
       WHERE ${sqlIntOk("id")}
       ORDER BY id"""))

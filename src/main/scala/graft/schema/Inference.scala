@@ -2,6 +2,9 @@ package graft.schema
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.expressions.ParseUtil
 
 /** Runtime re-implementation of the reference's compile-time column-type
   * inference (acowley/Frames `src/Frames/ColumnUniverse.hs`,
@@ -50,24 +53,25 @@ object Inference {
     * final LUB is TText and the distinct set stayed small. */
   final val MissingMarkers = Set("", "NA")
 
-  private val IntishRe = "^[+-]?\\d+(\\.0)?$".r
-  private val DoubleRe = "^[+-]?(\\d+\\.?\\d*|\\.\\d+)([eE][+-]?\\d+)?$".r
-  private val BoolRe = "(?i)^(true|false)$".r
-
   /** Per-cell candidate: the least lattice type that can represent the
     * cell. Missing cells return None (constrain nothing — the reference's
     * `Possibly` with no information). Custom types are the most specific
-    * candidates, tried first in registration order. */
+    * candidates, tried first in registration order. The built-in types
+    * are decided by the parse kernels the readers run on every cell
+    * ([[ParseUtil]]), so a column is typed Int only if the reader can
+    * parse each of its prefix cells as one: an integer beyond 64 bits
+    * widens the column to Double. Comma-stripped doubles (`"80,000"`)
+    * are Double (ColumnTypeable.hs:77-80). */
   def cellType(raw: String, customs: Seq[CustomCellType] = Nil): Option[ColType] = {
     val s = raw.trim
     if (MissingMarkers.contains(s)) None
     else customs.find(_.matches(s)) match {
       case Some(c) => Some(TCustom(c.key))
       case None =>
-        if (BoolRe.pattern.matcher(s).matches()) Some(TBool)
-        else if (IntishRe.pattern.matcher(s).matches()) Some(TInt)
-        // comma-stripped double ("80,000" -> 80000.0, ColumnTypeable.hs:77-80)
-        else if (DoubleRe.pattern.matcher(s.replace(",", "")).matches()) Some(TDouble)
+        val cell = UTF8String.fromString(s)
+        if (ParseUtil.parseBool(cell) != null) Some(TBool)
+        else if (ParseUtil.parseIntish(cell) != null) Some(TInt)
+        else if (ParseUtil.parseDouble(cell) != null) Some(TDouble)
         else Some(TText)
     }
   }
@@ -113,14 +117,13 @@ object Inference {
   }
 
   final case class Options(
-      inferencePrefix: Int = 1000, // TH.hs:134-136 default
       categoricalMaxCardinality: Int = 0, // 0 = off; reference default 8 when enabled
       customTypes: Seq[CustomCellType] = Nil)
 
   /** Fold a prefix of raw string rows (header excluded) into per-column
-    * types. `rows` is a bounded sample — caller guarantees
-    * `rows.length <= opts.inferencePrefix`. Column-count mismatches are a
-    * hard error, mirroring CSV.hs:192-206. */
+    * types. `rows` is a bounded sample (the caller reads a bounded
+    * prefix). Column-count mismatches are a hard error, mirroring
+    * CSV.hs:192-206. */
   def inferFromRows(
       names: Seq[String],
       rows: Iterable[Seq[String]],

@@ -1,9 +1,9 @@
 package graft.sources
 
-import java.nio.charset.Charset
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import java.io.{BufferedReader, InputStreamReader}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,8 +27,10 @@ import graft.schema.Inference.{ColInfo, TBool, TDouble, TInt, TText}
   *     channel listing which columns failed (`src/Frames/CSV.hs:403-429`,
   *     which prints per-cell Left/Right to stderr).
   *
-  * Scale design: only schema inference reads a bounded prefix (<=
-  * `inferencePrefix` rows) on the driver; the data path is
+  * Scale design: only schema inference reads on the driver — a bounded
+  * prefix (<= `inferencePrefix` rows) of each sampled file, through
+  * Hadoop's `FileSystem`, with no Spark job — and it types cells with
+  * the parse kernels the data path runs. The data path is
   * `spark.read.csv` with an explicit all-string schema — distributed,
   * splittable, filter-pushdown-friendly — followed by codegen'd parse
   * expressions ([[graft.functions.Parsing]]). No UDFs, no collect.
@@ -145,97 +147,22 @@ object Csv {
   // Inference — bounded driver-side prefix -> per-column lattice fold.
   // ------------------------------------------------------------------
 
-  /** First regular file for a path that may be a directory (e.g. a
-    * Spark-written CSV directory). */
-  private def firstFile(path: String): java.nio.file.Path = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) {
-      val stream = Files.list(p)
-      try
-        stream.iterator().asScala
-          .filter { f =>
-            val n = f.getFileName.toString
-            Files.isRegularFile(f) && !n.startsWith("_") && !n.startsWith(".")
-          }
-          .toSeq.sortBy(_.toString)
-          .headOption.getOrElse(sys.error(s"no files under $path"))
-      finally stream.close()
-    } else p
-  }
-
-  /** Read up to n lines with the configured encoding (driver-side,
-    * bounded). */
-  private def prefixLines(path: String, n: Int, encoding: String): Vector[String] = {
-    val reader = Files.newBufferedReader(firstFile(path), Charset.forName(encoding))
-    try {
-      val out = Vector.newBuilder[String]
-      var line = reader.readLine()
-      var k = 0
-      while (line != null && k < n) {
-        out += line
-        k += 1
-        line = reader.readLine()
-      }
-      out.result()
-    } finally reader.close()
-  }
-
-  private def sanitize(names: Seq[String]): Seq[String] =
-    names.zipWithIndex.map { case (n, i) => if (n.trim.isEmpty) s"_c$i" else n.trim }
-
-  /** Column names + inferred per-column types from a bounded file prefix
-    * (EP1 of SURVEY §3: the runtime analogue of `tableTypes`).
-    * Column-count mismatches in the prefix are a hard error, mirroring
-    * `CSV.hs:192-206` (embedded newlines unsupported). */
-  def inferSchema(path: String, opts: ParserOptions = ParserOptions()): Seq[ColInfo] = {
-    val hasHeader = opts.headerOverride.isEmpty
-    val lines = prefixLines(
-      path, opts.inferencePrefix + (if (hasHeader) 1 else 0), opts.encoding)
-    require(lines.nonEmpty, s"empty CSV: $path")
-    val names = sanitize(
-      opts.headerOverride.getOrElse(tokenizeRow(lines.head, opts)))
-    val dataLines = if (hasHeader) lines.tail else lines
-    val rows = dataLines.map(l => tokenizeRow(l, opts))
-    Inference.inferFromRows(
-      names, rows,
-      Inference.Options(
-        opts.inferencePrefix, opts.categoricalMaxCardinality, opts.customTypes))
-  }
-
-  /** Sampled MULTI-FILE schema inference — the scale-out complement to
-    * [[inferSchema]]'s reference-faithful single-file prefix
-    * (`/root/reference/src/Frames/TH.hs:134-136` reads one file). A
-    * 100 TB multi-file CSV drop can type-drift in later files (an int
-    * column goes fractional in file 400); first-file-only inference then
-    * types the column Int and the strict reader silently drops every
-    * drifted row. This variant reads the first `inferencePrefix` lines
-    * of up to `maxFiles` files — chosen at an even stride over the
-    * sorted listing so the first AND last files are always sampled —
-    * as one Spark job (a task per file; only the bounded prefixes
-    * return to the driver), then folds ALL sampled rows through the
-    * same §1.4 type lattice. Names come from the first file's header;
-    * a sampled file whose column count disagrees is a hard error
-    * (mirroring the reference's column-mismatch error), not a silent
-    * drop. Default behavior of the readers is unchanged — callers opt
-    * in by passing the result to `readTableWith`. */
-  def inferSchemaDistributed(
-      spark: SparkSession,
-      path: String,
-      opts: ParserOptions = ParserOptions(),
-      maxFiles: Int = 64): Seq[ColInfo] = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    val hasHeader = opts.headerOverride.isEmpty
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The first `n` lines of each sampled file under `path`, read on the
+    * driver through Hadoop's `FileSystem` in `encoding`. A directory is
+    * listed one level deep; its hidden entries (`_`/`.` prefixed) are
+    * skipped and the rest sorted by path. Up to `maxFiles` of them are
+    * sampled at an even stride, so the first and the last file are always
+    * read. Files are opened one after another. */
+  private def samplePrefixes(
+      conf: Configuration, path: String, n: Int, encoding: String,
+      maxFiles: Int): Seq[Vector[String]] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
     val all =
-      (if (fs.getFileStatus(root).isDirectory) fs.listStatus(root).toSeq
-       else Seq(fs.getFileStatus(root)))
-        .filter { s =>
-          val n = s.getPath.getName
-          s.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        .map(_.getPath.toString)
-        .sorted
+      if (!fs.getFileStatus(root).isDirectory) Seq(root)
+      else fs.listStatus(root).toSeq
+        .filter(s => s.isFile && !Seq("_", ".").exists(s.getPath.getName.startsWith))
+        .map(_.getPath).sortBy(_.toString)
     require(all.nonEmpty, s"no files under $path")
     val files =
       if (all.size <= maxFiles) all
@@ -243,53 +170,72 @@ object Csv {
       else (0 until maxFiles)
         .map(i => all((i.toLong * (all.size - 1) / (maxFiles - 1)).toInt))
         .distinct
-    val n = opts.inferencePrefix + (if (hasHeader) 1 else 0)
-    val encoding = opts.encoding
-    // One task per sampled file; each opens its file through the Hadoop
-    // filesystem (so any scheme Spark can read works) and returns only
-    // the bounded line prefix. Raw lines come back — tokenization stays
-    // on the driver so ParserOptions (which may carry non-serializable
-    // custom parse kernels) never enters the closure. The DRIVER's Hadoop
-    // configuration rides along (SerializableConfiguration) so
-    // spark.hadoop.* settings — object-store credentials, endpoints,
-    // custom fs impls — apply on executors too; a bare `new
-    // Configuration()` would silently drop them.
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val prefixes: Array[(String, Vector[String])] = spark.sparkContext
-      .parallelize(files, files.size)
-      .map { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        val tfs = p.getFileSystem(hadoopConf.value)
-        val reader = new java.io.BufferedReader(
-          new java.io.InputStreamReader(tfs.open(p), encoding))
-        try {
-          val out = Vector.newBuilder[String]
-          var line = reader.readLine()
-          var k = 0
-          while (line != null && k < n) {
-            out += line
-            k += 1
-            line = reader.readLine()
-          }
-          (f, out.result())
-        } finally reader.close()
-      }
-      .collect()
-      .sortBy(_._1) // deterministic fold order, whatever the task order
-    val byFile = prefixes.map(_._2).filter(_.nonEmpty)
-    require(byFile.nonEmpty, s"all sampled files empty under $path")
+    files.map { f =>
+      val reader = new BufferedReader(new InputStreamReader(fs.open(f), encoding))
+      try Iterator.continually(reader.readLine()).takeWhile(_ != null).take(n).toVector
+      finally reader.close()
+    }
+  }
+
+  private def sanitize(names: Seq[String]): Seq[String] =
+    names.zipWithIndex.map { case (n, i) => if (n.trim.isEmpty) s"_c$i" else n.trim }
+
+  /** Column names + inferred per-column types from a bounded file prefix
+    * (EP1 of SURVEY §3: the runtime analogue of `tableTypes`): the first
+    * `inferencePrefix` rows of the first file of `path`, as the reference
+    * reads one file (`src/Frames/TH.hs:134-136`). `path` may be a plain
+    * path or any URI Hadoop reads, under the active session's Hadoop
+    * configuration (Hadoop's defaults without a session). Column-count
+    * mismatches in the prefix are a hard error, mirroring
+    * `CSV.hs:192-206` (embedded newlines unsupported). */
+  def inferSchema(path: String, opts: ParserOptions = ParserOptions()): Seq[ColInfo] = {
+    val conf = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration).getOrElse(new Configuration())
+    inferSampled(conf, path, opts, maxFiles = 1)
+  }
+
+  /** Sampled MULTI-FILE schema inference — the scale-out complement to
+    * [[inferSchema]]'s reference-faithful single-file prefix. A
+    * multi-file CSV drop can type-drift in later files (an int column
+    * goes fractional in file 400); first-file-only inference then types
+    * the column Int and the strict reader silently drops every drifted
+    * row. This variant reads the first `inferencePrefix` lines of up to
+    * `maxFiles` files — chosen at an even stride over the sorted listing
+    * so the first AND last files are always sampled — and folds ALL
+    * sampled rows through the same §1.4 type lattice. Names come from
+    * the first file's header; a sampled file whose column count
+    * disagrees is a hard error (mirroring the reference's column-mismatch
+    * error), not a silent drop. Callers opt in by passing the result to
+    * `readTableWith`.
+    *
+    * The prefixes are read on the driver, through `spark`'s Hadoop
+    * configuration, and no Spark job runs: a job per call cost more than
+    * the reads it distributed. Sampling 64 files therefore means 64
+    * sequential opens on the driver. The name predates that and stays,
+    * as callers use it. */
+  def inferSchemaDistributed(
+      spark: SparkSession,
+      path: String,
+      opts: ParserOptions = ParserOptions(),
+      maxFiles: Int = 64): Seq[ColInfo] = {
+    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
+    inferSampled(spark.sparkContext.hadoopConfiguration, path, opts, maxFiles)
+  }
+
+  private def inferSampled(
+      conf: Configuration, path: String, opts: ParserOptions, maxFiles: Int): Seq[ColInfo] = {
+    val hasHeader = opts.headerOverride.isEmpty
+    val byFile = samplePrefixes(
+      conf, path, opts.inferencePrefix + (if (hasHeader) 1 else 0), opts.encoding, maxFiles)
+      .filter(_.nonEmpty)
+    require(byFile.nonEmpty, s"empty CSV: $path")
     val names = sanitize(
       opts.headerOverride.getOrElse(tokenizeRow(byFile.head.head, opts)))
-    val rows = byFile.toSeq.flatMap { lines =>
+    val rows = byFile.flatMap { lines =>
       (if (hasHeader) lines.tail else lines).map(l => tokenizeRow(l, opts))
     }
     Inference.inferFromRows(
-      names, rows,
-      Inference.Options(
-        // the fold consumes every sampled row (prefix * sampled files)
-        rows.size max opts.inferencePrefix,
-        opts.categoricalMaxCardinality, opts.customTypes))
+      names, rows, Inference.Options(opts.categoricalMaxCardinality, opts.customTypes))
   }
 
   // ------------------------------------------------------------------
@@ -353,7 +299,7 @@ object Csv {
       spark: SparkSession,
       path: String,
       opts: ParserOptions = ParserOptions()): DataFrame = {
-    val cols = inferSchema(path, opts)
+    val cols = inferSchemaDistributed(spark, path, opts, maxFiles = 1)
     val raw = rawRead(spark, path, cols.map(_.name), opts)
     typedProjection(raw.filter(allTypedParsed(cols)), cols)
   }
@@ -395,9 +341,9 @@ object Csv {
       opts: ParserOptions = ParserOptions()): org.apache.spark.sql.Dataset[T] = {
     val enc = org.apache.spark.sql.Encoders.product[T]
     val fields = enc.schema.fields
-    val names = sanitize(opts.headerOverride.getOrElse(
-      tokenizeRow(prefixLines(path, 1, opts.encoding).headOption
-        .getOrElse(sys.error(s"empty CSV: $path")), opts)))
+    val names = sanitize(opts.headerOverride.getOrElse(tokenizeRow(
+      samplePrefixes(spark.sparkContext.hadoopConfiguration, path, 1, opts.encoding, 1)
+        .head.headOption.getOrElse(sys.error(s"empty CSV: $path")), opts)))
     require(names.length == fields.length,
       s"${fields.length}-field ${enc.clsTag.runtimeClass.getSimpleName} vs " +
         s"${names.length}-column file $path (fields map positionally)")
@@ -429,7 +375,7 @@ object Csv {
       spark: SparkSession,
       path: String,
       opts: ParserOptions = ParserOptions()): DataFrame = {
-    val cols = inferSchema(path, opts)
+    val cols = inferSchemaDistributed(spark, path, opts, maxFiles = 1)
     typedProjection(rawRead(spark, path, cols.map(_.name), opts), cols)
   }
 
@@ -442,7 +388,7 @@ object Csv {
       spark: SparkSession,
       path: String,
       opts: ParserOptions = ParserOptions()): DebugResult = {
-    val cols = inferSchema(path, opts)
+    val cols = inferSchemaDistributed(spark, path, opts, maxFiles = 1)
     val raw = rawRead(spark, path, cols.map(_.name), opts)
     val failedCols = array_compact(array(
       cols.filter(_.colType != TText).map(ci =>

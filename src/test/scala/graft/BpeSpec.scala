@@ -167,7 +167,7 @@ class BpeSpec extends SparkSpec {
     val got = Bpe.learnMerges(docs, "doc_id", "text", numMerges = n)
     // the reliable-checkpointer path learns the identical table (the
     // executor-loss-safe strategy changes only where cut blocks live)
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft-bpe-ckpt")
+    val ckptDir = tempDir("graft-bpe-ckpt")
     spark.sparkContext.setCheckpointDir(ckptDir.toString)
     assert(Bpe.learnMerges(docs, "doc_id", "text", numMerges = n,
       checkpointer = graft.operators.Checkpoint.reliable) == got)
@@ -307,7 +307,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("writeMerges/readMerges round-trips a learned table; corruption fails at load") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-merges").toString
+    val dir = tempDir("graft-merges").toString
     val learned = graft.operators.Bpe.learnMerges(
       Tables(spark, "/root/testdata/sf0.001").documents,
       "doc_id", "text", numMerges = 12)

@@ -77,7 +77,7 @@ class CmsSpec extends SparkSpec {
 
   test("cms_union survives a parquet round-trip") {
     import graft.functions.expressions.CmsUnion
-    val dir = java.nio.file.Files.createTempDirectory("graft-cms").toString
+    val dir = tempDir("graft-cms").toString
     val direct = skewed.toDF("v").agg(CountMin.sketch(col("v")))
       .head.getSeq[Long](0)
     skewed.zipWithIndex.map { case (v, i) => (i % 3, v) }.toDF("b", "v")

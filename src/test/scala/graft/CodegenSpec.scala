@@ -35,7 +35,7 @@ final case class Prestige(
   * generated source text pinned byte-for-byte for the reference's own
   * managers/employees/prestige fixtures, plus the typed `Dataset[T]`
   * read path the generated classes exist for. managers and employees are
-  * repo-owned copies under src/test/resources/frames (`fixture`);
+  * repo-owned copies under the `frames/` resources (`fixture`);
   * prestigePartial is read in place from /root/reference/test/data, and
   * its tests cancel where that data is absent (`requireFile`). */
 class CodegenSpec extends SparkSpec {

@@ -10,8 +10,8 @@ import graft.sources.Csv.{NoQuoting, ParserOptions, RFC4180Quoting}
 
 /** CSV front-door parity with the reference's own test corpus and
   * published golden values (acowley/Frames `test/Spec.hs`, README.org).
-  * The small hand-written fixtures are repo-owned copies under
-  * src/test/resources/frames (`fixture`); the real datasets (prestige*,
+  * The small hand-written fixtures are repo-owned copies under the
+  * `frames/` resources (`fixture`); the real datasets (prestige*,
   * mpg, issue114, FL2) are read in place from /root/reference/test/data
   * and /root/reference/data, and their tests cancel where that data is
   * absent (`requireFile`, FIXTURES.md). The parse features those tests
@@ -102,7 +102,7 @@ class CsvSpec extends SparkSpec {
   test("rows after a missing cell are not truncated (test/Spec.hs:151-172)") {
     // NoTruncate-shaped inline fixture (test/examples.toml): a blank cell
     // must not end the stream — later rows still arrive.
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
+    val dir = tempDir("graft_csv").toFile
     val f = new java.io.File(dir, "noTruncate.csv")
     val w = new java.io.PrintWriter(f)
     w.write("id,foo\n1,10\n2,\n3,30\n4,40\n")
@@ -111,6 +111,32 @@ class CsvSpec extends SparkSpec {
     assert(maybe.count() == 4)
     val strict = Csv.readTable(spark, f.getAbsolutePath)
     assert(strict.count() == 3) // row 2 dropped, rows 3-4 kept
+  }
+
+  test("a file: URI reads as the plain path does, in every reader") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    val path = fixture("partial.csv")
+    val uri = s"file://$path"
+    assert(Csv.inferSchema(uri) == Csv.inferSchema(path))
+    assert(rows(Csv.readTable(spark, uri)) == rows(Csv.readTable(spark, path)))
+    assert(rows(Csv.readTableMaybe(spark, uri)) == rows(Csv.readTableMaybe(spark, path)))
+    val (viaUri, viaPath) = (Csv.readTableDebug(spark, uri), Csv.readTableDebug(spark, path))
+    assert(rows(viaUri.rows) == rows(viaPath.rows))
+    assert(rows(viaUri.corrupt) == rows(viaPath.corrupt))
+    assert(rows(viaPath.rows).size == 2 && rows(viaPath.corrupt).size == 4)
+    val managers = fixture("managers.csv")
+    assert(Csv.readTableAs[Managers](spark, s"file://$managers").collect().sortBy(_.id).toSeq ==
+      Csv.readTableAs[Managers](spark, managers).collect().sortBy(_.id).toSeq)
+  }
+
+  test("an integer beyond 64 bits widens its column to Double, and strict reads keep its row") {
+    val path = fixture("overflow.csv")
+    assert(Csv.inferSchema(path).map(c => c.name -> c.sparkType) == Seq(
+      "id" -> LongType, "big" -> DoubleType))
+    val rows = Csv.readTable(spark, path).orderBy("id").collect()
+    assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+    assert(rows.map(_.getDouble(1)).toSeq == Seq(12345678901234567890.0, 42.0, -7.0))
   }
 
   // ------- reference-data features on hand-made fixtures (FIXTURES.md) -------
@@ -228,7 +254,7 @@ class CsvSpec extends SparkSpec {
   test("write->read round trip preserves values, canonicalizing '80,000' (test/Spec.hs:118-146)") {
     val cols = Csv.inferSchema(fixture("managers.csv"))
     val orig = Csv.readTable(spark, fixture("managers.csv"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_rt").toFile
+    val dir = tempDir("graft_csv_rt").toFile
     val out = new java.io.File(dir, "managers_out").getAbsolutePath
     Csv.writeCsv(orig, out, singleFile = true)
     // re-read with the KNOWN types, as the reference round trip does
@@ -249,7 +275,7 @@ class CsvSpec extends SparkSpec {
       .toDF("id", "b", "d1", "d2", "t")
       .orderBy("id").coalesce(1)
     def written(referenceStyle: Boolean): Seq[String] = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_csv_golden").toFile
+      val dir = tempDir("graft_csv_golden").toFile
       val out = new java.io.File(dir, "g").getAbsolutePath
       Csv.writeCsv(df, out, singleFile = true, referenceStyle = referenceStyle)
       val part = new java.io.File(out).listFiles()
@@ -273,16 +299,21 @@ class CsvSpec extends SparkSpec {
       "2,false,80000.0,100.0,\"has, comma\""))
   }
 
-  test("inferSchemaDistributed: a later file widening a column is sampled, strict read drops nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_drift").toFile
-    // file 1: x looks Int for its whole prefix; file 2 drifts to Double
+  /** Two CSV files: x looks Int for the whole first file, and the second
+    * drifts to Double. */
+  private def driftFixture(): String = {
+    val dir = tempDir("graft_csv_drift").toFile
     java.nio.file.Files.writeString(
       new java.io.File(dir, "part-0000.csv").toPath,
       "id,x\n1,10\n2,20\n")
     java.nio.file.Files.writeString(
       new java.io.File(dir, "part-0001.csv").toPath,
       "id,x\n3,30.5\n4,40\n")
-    val path = dir.getAbsolutePath
+    dir.getAbsolutePath
+  }
+
+  test("inferSchemaDistributed: a later file widening a column is sampled, strict read drops nothing") {
+    val path = driftFixture()
     // single-file (reference-faithful) inference sees only file 1 -> Int,
     // and the strict reader silently drops the drifted row — the trap
     val narrow = Csv.inferSchema(path)
@@ -300,8 +331,37 @@ class CsvSpec extends SparkSpec {
       == 100.5)
   }
 
+  test("inferSchemaDistributed reads the sampled prefixes without a Spark job") {
+    val path = driftFixture()
+    var wide = Seq.empty[Inference.ColInfo]
+    val (_, stages) = countWork { wide = Csv.inferSchemaDistributed(spark, path) }
+    assert(stages == 0)
+    assert(wide.map(_.sparkType) == Seq(LongType, DoubleType))
+  }
+
+  test("inferSchema equals inferSchemaDistributed with maxFiles = 1 on every committed fixture") {
+    import scala.jdk.CollectionConverters._
+    val files = getClass.getClassLoader.getResources("frames").asScala.toSeq
+      .flatMap(u => new java.io.File(u.toURI).listFiles().toSeq)
+      .filter(_.getName.endsWith(".csv"))
+    // the test and the main resources both hold fixtures
+    assert(Set("managers.csv", "partial.csv", "overflow.csv")
+      .subsetOf(files.map(_.getName).toSet), files.mkString(", "))
+    files.foreach { f =>
+      val opts = f.getName match {
+        case "latinManagers.csv" => ParserOptions(encoding = "ISO-8859-1")
+        case "noHeader.csv" => ParserOptions(headerOverride = Some(Seq("Job", "Schooling", "Money")))
+        case _ => ParserOptions()
+      }
+      def outcome(infer: => Seq[Inference.ColInfo]) =
+        scala.util.Try(infer).toEither.left.map(e => (e.getClass, e.getMessage))
+      assert(outcome(Csv.inferSchema(f.getPath, opts)) ==
+        outcome(Csv.inferSchemaDistributed(spark, f.getPath, opts, maxFiles = 1)), f.getName)
+    }
+  }
+
   test("inferSchemaDistributed: column-count drift in a sampled file is a hard error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_cols").toFile
+    val dir = tempDir("graft_csv_cols").toFile
     java.nio.file.Files.writeString(
       new java.io.File(dir, "a.csv").toPath, "id,x\n1,10\n")
     java.nio.file.Files.writeString(
@@ -317,7 +377,7 @@ class CsvSpec extends SparkSpec {
       (1L, """MUSSER, B W "B""""),
       (2L, """say "hi", twice"""),
       (3L, "plain")).toDF("id", "name")
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_q").toFile
+    val dir = tempDir("graft_csv_q").toFile
     val out = new java.io.File(dir, "quoted_out").getAbsolutePath
     Csv.writeCsv(orig, out, singleFile = true)
     val back = spark.read

@@ -287,7 +287,7 @@ class GraphSpec extends SparkSpec {
   }
 
   test("reliable checkpointer: identical ranks, survives with a durable checkpoint dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    val dir = tempDir("graft-ckpt").toFile
     try {
       spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
       val base = Graph.pagerankQuantized(edges, "src", "dst", 3)

@@ -68,7 +68,7 @@ class HistSpec extends SparkSpec {
   }
 
   test("persisted sketch table round-trips through parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist").toString
+    val dir = tempDir("graft-hist").toString
     vals.zipWithIndex.map { case (v, i) => (i % 4, v) }.toDF("b", "v")
       .groupBy(col("b")).agg(Hist.sketch(col("v"), 0L, 100L, 100).as("hk"))
       .write.mode("overwrite").parquet(dir)

@@ -80,7 +80,7 @@ class HllSpec extends SparkSpec {
   }
 
   test("persisted sketch table round-trips through parquet") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hll").toString
+    val dir = tempDir("graft-hll").toString
     val direct = vals.toDF("v").agg(HllDistinct(col("v"))).head.getDouble(0)
     vals.zipWithIndex.map { case (v, i) => (i % 4, v) }.toDF("b", "v")
       .groupBy(col("b")).agg(HllSketch(col("v")).as("sk"))

@@ -89,6 +89,46 @@ class InferencePropSpec extends SparkSpec {
     }
   }
 
+  // ---------------- cell classification against the regex grammar ----------------
+
+  /** The regex formulation `cellType` used before it called the parse
+    * kernels, kept as the reference (the patterns are
+    * [[graft.functions.Parsing]]'s). */
+  private def regexCellType(raw: String): Option[ColType] = {
+    import graft.functions.Parsing
+    val s = raw.trim
+    if (MissingMarkers.contains(s)) None
+    else if (s.matches(Parsing.BoolRe)) Some(TBool)
+    else if (s.matches(Parsing.IntishRe)) Some(TInt)
+    else if (s.replace(",", "").matches(Parsing.DoubleRe)) Some(TDouble)
+    else Some(TText)
+  }
+
+  test("cellType agrees with the regex grammar except on integers beyond 64 bits (20,000 generated cells)") {
+    val pieces = Vector(
+      "", " ", "+", "-", ".", ",", "0", "7", "42", "123456789", "9223372036854775807",
+      "9223372036854775808", "12345678901234567890", ".0", ".5", "e", "E", "e+", "e-",
+      "true", "FaLsE", "NA", "x", "\t")
+    val rng = new Random(7)
+    val generated = Seq.fill(20000)(Seq.fill(1 + rng.nextInt(4))(pieces(rng.nextInt(pieces.size))).mkString)
+    val cells = generated ++ Seq(
+      "-9223372036854775808", "-9223372036854775807", "9223372036854775807.0",
+      "99999999999999999999.0", "1,000", "80,000.5", " TRUE ", "NA ", "")
+    // the kernel parses intish values in ±(2^63 - 1), so Long.MinValue's
+    // own literal is beyond its range too
+    def beyond64Bits(s: String): Boolean =
+      BigInt(s.trim.stripSuffix(".0")).abs > BigInt(Long.MaxValue)
+    cells.foreach { c =>
+      val (got, ref) = (cellType(c), regexCellType(c))
+      if (got != ref)
+        assert(ref.contains(TInt) && got.contains(TDouble) && beyond64Bits(c),
+          s"'$c': kernels say $got, the regex grammar $ref")
+    }
+    assert(cells.exists(c => regexCellType(c).contains(TInt) && beyond64Bits(c)),
+      "no generated cell reached beyond 64 bits")
+    assert(Seq(TBool, TInt, TDouble, TText).forall(t => cells.exists(c => cellType(c).contains(t))))
+  }
+
   // ---------------- randomized CSV round trip ----------------
 
   // newline-free adversarial strings; "" and "NA" excluded because the
@@ -113,7 +153,7 @@ class InferencePropSpec extends SparkSpec {
           rng.nextBoolean())
       }
       val orig = rows.toDF("id", "n", "x", "s", "b")
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_csv_prop$seed").toFile
+      val dir = tempDir(s"graft_csv_prop$seed").toFile
       val out = new java.io.File(dir, "rt").getAbsolutePath
       Csv.writeCsv(orig, out, singleFile = true)
       val cols = Csv.inferSchema(out)

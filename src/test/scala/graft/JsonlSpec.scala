@@ -15,7 +15,7 @@ class JsonlSpec extends SparkSpec {
     StructField("id", LongType), StructField("text", StringType)))
 
   private def fixture: String = {
-    val dir = Files.createTempDirectory("graft_jsonl_spec")
+    val dir = tempDir("graft_jsonl_spec")
     Files.writeString(dir.resolve("part-0.jsonl"),
       """{"id": 1, "text": "alpha"}
         |{"id": 2 "text": "broken json"}
@@ -45,7 +45,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("debug read lands a literal null line in the corrupt channel") {
-    val dir = Files.createTempDirectory("graft_jsonl_null")
+    val dir = tempDir("graft_jsonl_null")
     Files.writeString(dir.resolve("part-0.jsonl"),
       """{"id": 1, "text": "alpha"}
         |null
@@ -59,7 +59,7 @@ class JsonlSpec extends SparkSpec {
   }
 
   test("round trip preserves rows and schema") {
-    val dir = Files.createTempDirectory("graft_jsonl_rt").toString
+    val dir = tempDir("graft_jsonl_rt").toString
     val docs = Tables(spark, "/root/testdata/sf0.001").documents
     Jsonl.writeJsonl(docs, dir)
     val back = Jsonl.readJsonl(spark, dir, docs.schema)
@@ -70,7 +70,7 @@ class JsonlSpec extends SparkSpec {
 
   test("text lines round-trip as a multiset, including empty and unicode lines") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_text_spec").toString
+    val dir = tempDir("graft_text_spec").toString
     val lines = Seq("alpha beta", "", "  leading and trailing  ",
       "Espérança — ünïcode ✓", "alpha beta")
     val df = lines.toDF("text")

@@ -69,7 +69,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("manifest pruning: pruned read is a superset, equality after filter, fewer files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val dir = tempDir("graft-zorder").toString
     val li = spark.read.parquet(s"$sf0001/lineitem.parquet")
       .select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity")
     Layout.zorderLayout(li, Seq("l_partkey", "l_suppkey"), 32)
@@ -94,7 +94,7 @@ class LayoutSpec extends SparkSpec {
   test("partitioned write prunes directories at planning time") {
     import graft.operators.Layout
     val docs = Tables(spark, sf0001).documents
-    val dir = java.nio.file.Files.createTempDirectory("graft_part_spec").toString
+    val dir = tempDir("graft_part_spec").toString
     Layout.writePartitioned(docs, dir, Seq("lang"))
     val back = Layout.readPartitioned(spark, dir)
     // round trip preserves every row (partition cols come back last)

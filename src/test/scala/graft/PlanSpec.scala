@@ -249,7 +249,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("hive-partitioned write prunes partitions at the source (PartitionFilters)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-partwrite").toString
+    val dir = tempDir("graft-partwrite").toString
     val events = Tables(spark, sf).events
       .withColumn("day", org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col("ts")))

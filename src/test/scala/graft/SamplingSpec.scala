@@ -184,7 +184,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("writeTrainingShards: on-disk order IS the permutation; manifest consistent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = tempDir("graft-shards").toString
     val df = (0L until 200L).toDF("id")
     val manifest = Sampling.writeTrainingShards(df, "id", dir, nShards = 4)
       .collect()

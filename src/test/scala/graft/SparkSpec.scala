@@ -1,20 +1,35 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{CsvQueries, QueryDef}
 
 /** Shared local session for specs — one per suite, lazily created. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
 
-  /** Absolute path of a repo-owned fixture under
-    * `src/test/resources/frames` (see FIXTURES.md), resolved from the
-    * test classpath. */
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything
+    * in it after the suite. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit)
+    finally super.afterAll()
+
+  /** Absolute path of a repo-owned fixture under `frames/`
+    * (`src/test/resources` or `src/main/resources`; see FIXTURES.md),
+    * resolved from the test classpath. */
   def fixture(name: String): String = {
     val url = getClass.getResource(s"/frames/$name")
     require(url != null, s"no test resource frames/$name on the classpath")

@@ -21,7 +21,7 @@ class StreamingSpec extends SparkSpec {
     EventRow(id, ts(min), user, typ, v)
 
   private def checkpoint(): String =
-    Files.createTempDirectory("graft-ckpt").toString
+    tempDir("graft-ckpt").toString
 
   test("windowedCounts: streaming result equals the batch plan on the same data") {
     val events = Seq(
@@ -52,7 +52,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("upsertSink folds a CDC stream into the latest snapshot across batches") {
-    val target = Files.createTempDirectory("graft-upsert").toString
+    val target = tempDir("graft-upsert").toString
     val input = MemoryStream[(Long, String, Long, Boolean)](spark)
     val changes = input.toDF().toDF("k", "v", "seq", "del")
     val q = EventStreams.upsertSink(
@@ -87,7 +87,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("snapshot time travel: asOf serves history, retention bounds it, compaction destroys it") {
-    val target = Files.createTempDirectory("graft-travel").toString
+    val target = tempDir("graft-travel").toString
     val input = MemoryStream[(Long, String, Long, Boolean)](spark)
     val changes = input.toDF().toDF("k", "v", "seq", "del")
     val q = EventStreams.upsertSink(
@@ -143,13 +143,13 @@ class StreamingSpec extends SparkSpec {
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("value")).as("purchase_value"))
     // stream the click fixture file-by-file -> several real micro-batches
-    val src = Files.createTempDirectory("graft-asof-src").toString
+    val src = tempDir("graft-asof-src").toString
     clicks.repartition(4).write.mode("overwrite").parquet(src)
     val stream = spark.readStream
       .schema(clicks.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(src)
-    val target = Files.createTempDirectory("graft-asof-out").toString
+    val target = tempDir("graft-asof-out").toString
     val q = EventStreams.asofEnrichSink(
       stream, purchases, Seq("user_id"), "ts", Seq("purchase_value"),
       target, checkpoint())
@@ -167,13 +167,13 @@ class StreamingSpec extends SparkSpec {
   test("corpusStatsSink: streamed sketch rows fold to the direct batch aggregate") {
     val docs = Tables(spark, sf0001).documents
     // stream the corpus file-by-file -> several real micro-batches
-    val src = Files.createTempDirectory("graft-stats-src").toString
+    val src = tempDir("graft-stats-src").toString
     docs.repartition(4).write.mode("overwrite").parquet(src)
     val stream = spark.readStream
       .schema(docs.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(src)
-    val target = Files.createTempDirectory("graft-stats-out").toString
+    val target = tempDir("graft-stats-out").toString
     val q = EventStreams.corpusStatsSink(
       stream, "source", "text", target, checkpoint())
     try q.processAllAvailable() finally q.stop()
@@ -221,13 +221,13 @@ class StreamingSpec extends SparkSpec {
         when(col("ts") < cut, cents).otherwise(lit(0L)).as("x_cents"))
     // stream file-by-file: users' events deliberately SPAN micro-batches,
     // so the readout only matches if cross-batch unit re-collapse is exact
-    val src = Files.createTempDirectory("graft-exp-src").toString
+    val src = tempDir("graft-exp-src").toString
     ev.repartition(4).write.mode("overwrite").parquet(src)
     val stream = spark.readStream
       .schema(ev.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(src)
-    val target = Files.createTempDirectory("graft-exp-out").toString
+    val target = tempDir("graft-exp-out").toString
     val q = EventStreams.experimentIngestSink(
       stream, "event_type", "arm", "user_id", "y_cents", "x_cents",
       target, checkpoint())
@@ -263,13 +263,13 @@ class StreamingSpec extends SparkSpec {
       FieldSpec("seg", (x, y) => x === y, m = 0.8, u = 0.2))
     Linkage.writeReferenceIndex(spark, "link_sink_spec", ref, "id", Seq("nat"), fields)
     try {
-      val src = Files.createTempDirectory("graft-linksink-src").toString
+      val src = tempDir("graft-linksink-src").toString
       probe.repartition(4).write.mode("overwrite").parquet(src)
       val stream = spark.readStream
         .schema(probe.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-      val target = Files.createTempDirectory("graft-linksink-out").toString
+      val target = tempDir("graft-linksink-out").toString
       val q = EventStreams.linkageProbeSink(
         stream, "link_sink_spec", "id", Seq("nat"), fields,
         lower = 0.0, upper = 5.0, target, checkpoint())
@@ -294,13 +294,13 @@ class StreamingSpec extends SparkSpec {
       corpus, "doc_id", "text", "ded_sink_spec", numBuckets = 8)
     try {
       // stream the batch file-by-file -> several real micro-batches
-      val src = Files.createTempDirectory("graft-dedsink-src").toString
+      val src = tempDir("graft-dedsink-src").toString
       batch.repartition(4).write.mode("overwrite").parquet(src)
       val stream = spark.readStream
         .schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-      val target = Files.createTempDirectory("graft-dedsink-out").toString
+      val target = tempDir("graft-dedsink-out").toString
       val q = EventStreams.dedupProbeSink(
         stream, "ded_sink_spec", "doc_id", "text", target, checkpoint())
       try q.processAllAvailable() finally q.stop()
@@ -332,13 +332,13 @@ class StreamingSpec extends SparkSpec {
     val eval = docs.filter(col("doc_id") % 5 === 0)
     TfIdf.writeLmIndex(train, "text", "lm_sink_spec", numBuckets = 8)
     try {
-      val src = Files.createTempDirectory("graft-lmsink-src").toString
+      val src = tempDir("graft-lmsink-src").toString
       eval.repartition(4).write.mode("overwrite").parquet(src)
       val stream = spark.readStream
         .schema(eval.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-      val target = Files.createTempDirectory("graft-lmsink-out").toString
+      val target = tempDir("graft-lmsink-out").toString
       val q = EventStreams.lmProbeSink(
         stream, "lm_sink_spec", "doc_id", "text", target, checkpoint())
       try q.processAllAvailable() finally q.stop()
@@ -367,13 +367,13 @@ class StreamingSpec extends SparkSpec {
       attrCols = Seq("label"))
     try {
       val queries = emb.filter(col("vec_id") < 10)
-      val src = Files.createTempDirectory("graft-ivfsink-src").toString
+      val src = tempDir("graft-ivfsink-src").toString
       queries.repartition(3).write.mode("overwrite").parquet(src)
       def stream = spark.readStream
         .schema(queries.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-      val target = Files.createTempDirectory("graft-ivfsink-out").toString
+      val target = tempDir("graft-ivfsink-out").toString
       val q = EventStreams.ivfProbeSink(
         stream, "ivf_sink_spec", "vec_id", "embedding", k = 5,
         centroids = centroids, nProbe = 6, target, checkpoint())
@@ -389,7 +389,7 @@ class StreamingSpec extends SparkSpec {
       // metadata predicate — streamed output equals the filtered batch
       // probe, and every neighbor satisfies the predicate
       val pred = col("label") % 3 === 1
-      val target2 = Files.createTempDirectory("graft-ivfsink-flt").toString
+      val target2 = tempDir("graft-ivfsink-flt").toString
       val q2 = EventStreams.ivfProbeSink(
         stream, "ivf_sink_spec", "vec_id", "embedding", k = 5,
         centroids = centroids, nProbe = 6, target2, checkpoint(),
@@ -417,11 +417,11 @@ class StreamingSpec extends SparkSpec {
       attrCols = Seq("label"))
     try {
       val queries = emb.filter(col("vec_id") % 10 === 0 && col("vec_id") < 100)
-      val src = Files.createTempDirectory("graft-cls-src").toString
+      val src = tempDir("graft-cls-src").toString
       queries.repartition(3).write.mode("overwrite").parquet(src)
       val stream = spark.readStream.schema(queries.schema)
         .option("maxFilesPerTrigger", 1).parquet(src)
-      val target = Files.createTempDirectory("graft-cls-out").toString
+      val target = tempDir("graft-cls-out").toString
       val q = EventStreams.knnClassifySink(
         stream, "ivf_cls_sink", "vec_id", "embedding", "label", k = 10,
         centroids = centroids, nProbe = 8, target, checkpoint())
@@ -454,8 +454,8 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.writeDedupIndex(
       seedCorpus, "doc_id", "text", "ded_ingest_spec", numBuckets = 2)
     try {
-      val src = Files.createTempDirectory("graft-ingest-src").toString
-      val target = Files.createTempDirectory("graft-ingest-out").toString
+      val src = tempDir("graft-ingest-src").toString
+      val target = tempDir("graft-ingest-out").toString
       val ckpt = checkpoint()
       def drop(rows: Seq[(Long, String)], file: String): Unit =
         rows.toDF("doc_id", "text").coalesce(1)
@@ -496,13 +496,13 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.writeSpanIndex(
       corpus, "doc_id", "text", "span_sink_spec", numBuckets = 8)
     try {
-      val src = Files.createTempDirectory("graft-spansink-src").toString
+      val src = tempDir("graft-spansink-src").toString
       batch.repartition(4).write.mode("overwrite").parquet(src)
       val stream = spark.readStream
         .schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
-      val target = Files.createTempDirectory("graft-spansink-out").toString
+      val target = tempDir("graft-spansink-out").toString
       val q = EventStreams.spanProbeSink(
         stream, "span_sink_spec", "doc_id", "text", target, checkpoint())
       try q.processAllAvailable() finally q.stop()
@@ -525,8 +525,8 @@ class StreamingSpec extends SparkSpec {
       seedCorpus, "doc_id", "text", "span_ingest_spec",
       windowTokens = 3, numBuckets = 2)
     try {
-      val src = Files.createTempDirectory("graft-spaningest-src").toString
-      val target = Files.createTempDirectory("graft-spaningest-out").toString
+      val src = tempDir("graft-spaningest-src").toString
+      val target = tempDir("graft-spaningest-out").toString
       val ckpt = checkpoint()
       def drop(rows: Seq[(Long, String)], file: String): Unit =
         rows.toDF("doc_id", "text").coalesce(1)
@@ -572,8 +572,8 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Dedup.writeSpanIndex(
       seedCorpus, "doc_id", "text", "span_rec_spec",
       windowTokens = 3, numBuckets = 2)
-    val dedTarget = Files.createTempDirectory("graft-dedrec-out").toString
-    val spanTarget = Files.createTempDirectory("graft-spanrec-out").toString
+    val dedTarget = tempDir("graft-dedrec-out").toString
+    val spanTarget = tempDir("graft-spanrec-out").toString
     try {
       val batch = Seq(
         (100L, "fresh material alpha beta gamma delta epsilon"),
@@ -637,8 +637,8 @@ class StreamingSpec extends SparkSpec {
     graft.operators.Similarity.writeIvfIndex(
       seed, "vec_id", "embedding", centroids, "ivf_ingest_spec", numBuckets = 2)
     try {
-      val src = Files.createTempDirectory("graft-ivfingest-src").toString
-      val target = Files.createTempDirectory("graft-ivfingest-out").toString
+      val src = tempDir("graft-ivfingest-src").toString
+      val target = tempDir("graft-ivfingest-out").toString
       def drop(rows: Seq[(Long, Seq[Float])], file: String): Unit =
         rows.toDF("vec_id", "embedding").coalesce(1)
           .write.mode("overwrite").parquet(s"$src/$file")
@@ -670,7 +670,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("currentSnapshot ignores an uncommitted (crash-partial) version dir") {
-    val target = Files.createTempDirectory("graft-partial").toString
+    val target = tempDir("graft-partial").toString
     // committed v_1: parquet write leaves a _SUCCESS marker
     spark.range(3).toDF("k").write.parquet(s"$target/v_000000000001")
     // crash-partial v_2: data file present, NO _SUCCESS — must not be
@@ -684,7 +684,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("compactSnapshots purges old tombstones and versions, stream resumes") {
-    val target = Files.createTempDirectory("graft-compact").toString
+    val target = tempDir("graft-compact").toString
     val ckpt = checkpoint()
     val input = MemoryStream[(Long, String, Long, Boolean)](spark)
     def sink(in: MemoryStream[(Long, String, Long, Boolean)]) =
@@ -734,7 +734,7 @@ class StreamingSpec extends SparkSpec {
     // `_c0002`..`_c0999` successor — the compacted result would never
     // supersede and the stale dir never be deleted. versionKey compares
     // generations numerically, so compaction must migrate the legacy dir.
-    val target = Files.createTempDirectory("graft-legacy").toString
+    val target = tempDir("graft-legacy").toString
     Seq((1L, "a", 1L, false), (2L, "b", 1L, true), (3L, "c", 5L, false))
       .toDF("k", "v", "seq", "del")
       .write.parquet(s"$target/v_000000000001_c1")
@@ -757,7 +757,7 @@ class StreamingSpec extends SparkSpec {
   test("currentSnapshot survives a foreign version dir name (string-order fallback)") {
     // A dir whose suffix after `_c` is not a number must degrade to the
     // old total-string ordering instead of crashing the read path.
-    val target = Files.createTempDirectory("graft-foreign").toString
+    val target = tempDir("graft-foreign").toString
     spark.range(3).toDF("k").write.parquet(s"$target/v_000000000001")
     spark.range(2).toDF("k").write.parquet(s"$target/v_cdc_one")
     val cur = EventStreams.currentSnapshot(spark, target).get // must not throw
@@ -1016,7 +1016,7 @@ class StreamingSpec extends SparkSpec {
         posexplode(BpeOps.bpeEncode(col("__pt"),
           graft.operators.Bpe.referenceMerges)).as(Seq("tok_pos", "token")))
     val docs = Tables(spark, sf0001).documents
-    val src = Files.createTempDirectory("graft-tok-stream").toString
+    val src = tempDir("graft-tok-stream").toString
     docs.repartition(3).write.mode("overwrite").parquet(src)
     val q = tokenize(spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src))
@@ -1050,7 +1050,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("pt_pos"),
         posexplode(UnigramOps.unigramPieces(col("__pt"), vocab))
           .as(Seq("tok_pos", "token")))
-    val src = Files.createTempDirectory("graft-uni-stream").toString
+    val src = tempDir("graft-uni-stream").toString
     docs.repartition(3).write.mode("overwrite").parquet(src)
     val q = tokenize(spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", 1).parquet(src))
@@ -1073,7 +1073,7 @@ class StreamingSpec extends SparkSpec {
     // expression, zero shuffle), so the SAME call prepares denoising
     // examples on an append stream — tokenize-and-corrupt on ingest
     val docs = Tables(spark, sf0001).documents
-    val src = Files.createTempDirectory("graft-corrupt-stream").toString
+    val src = tempDir("graft-corrupt-stream").toString
     docs.repartition(3).write.mode("overwrite").parquet(src)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(src)
@@ -1097,7 +1097,7 @@ class StreamingSpec extends SparkSpec {
     // runs as a stateless streaming select over an ingest directory —
     // the live quality-filter deployment shape.
     val docs = Tables(spark, sf0001).documents
-    val dir = Files.createTempDirectory("graft-jsonl-stream").toString
+    val dir = tempDir("graft-jsonl-stream").toString
     graft.sources.Jsonl.writeJsonl(docs, dir)
     val stream = spark.readStream.schema(docs.schema).json(dir)
     val q = graft.operators.Scoring.hashedLinearScore(stream, "doc_id", "text")
@@ -1122,7 +1122,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables(spark, sf0001).documents
     val label = graft.functions.TextFunctions.tokenCount(col("text")).cast("long")
     val w = graft.operators.Scoring.fitRidgeProbe(docs, "text", label, dim = 8)
-    val dir = Files.createTempDirectory("graft-probe-stream").toString
+    val dir = tempDir("graft-probe-stream").toString
     docs.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
@@ -1143,7 +1143,7 @@ class StreamingSpec extends SparkSpec {
   test("blocklistFilter: stateless safety gate scores a stream unchanged (t39 fixture)") {
     val docs = Tables(spark, sf0001).documents
     val phrases = Seq("slow fast", "data window", "the part", "spark")
-    val dir = Files.createTempDirectory("graft-block-stream").toString
+    val dir = tempDir("graft-block-stream").toString
     docs.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
@@ -1171,7 +1171,7 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_id"), col("event_type"), col("value"))
     val baseline = graft.operators.TimeSeries
       .madBaseline(ev, "event_type", "value")
-    val dir = Files.createTempDirectory("graft-mad-stream").toString
+    val dir = tempDir("graft-mad-stream").toString
     ev.repartition(3).write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
@@ -1200,7 +1200,7 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq(("a", t(1, 0, 10)), ("a", t(1, 0, 20)), ("b", t(1, 1, 0)))
     val b2 = Seq(("a", t(1, 0, 40)), ("a", t(1, 2, 5)), ("b", t(1, 0, 59)))
     val input = MemoryStream[(String, Timestamp)](spark)
-    val target = Files.createTempDirectory("graft-ewma-out").toString
+    val target = tempDir("graft-ewma-out").toString
     val q = EventStreams.ewmaIngestSink(
       input.toDF.toDF("k", "ts"), "k", "ts", target, checkpoint())
     try {
@@ -1243,7 +1243,7 @@ class StreamingSpec extends SparkSpec {
       (java.lang.Long.valueOf(1L), "signup", t(1, 0)),
       (java.lang.Long.valueOf(2L), "view", t(1, 30)))
     val input = MemoryStream[(java.lang.Long, String, Timestamp)](spark)
-    val target = Files.createTempDirectory("graft-funnel-out").toString
+    val target = tempDir("graft-funnel-out").toString
     val q = EventStreams.funnelIngestSink(
       input.toDF.toDF("user_id", "event_type", "ts"),
       "user_id", "event_type", "ts", steps, target, checkpoint())
@@ -1284,7 +1284,7 @@ class StreamingSpec extends SparkSpec {
     // No tally-based log can apply that as a delta.
     val b2 = Seq((java.lang.Long.valueOf(1L), 13L, "c", t(4, 0)))
     val input = MemoryStream[(java.lang.Long, Long, String, Timestamp)](spark)
-    val target = Files.createTempDirectory("graft-sesslog-out").toString
+    val target = tempDir("graft-sesslog-out").toString
     val q = EventStreams.sessionLogSink(
       input.toDF.toDF("user_id", "event_id", "event_type", "ts"),
       "user_id", "event_type", "ts", "event_id", target, checkpoint())
@@ -1313,7 +1313,7 @@ class StreamingSpec extends SparkSpec {
   test("compactBatches: readout-invariant, marker-fenced across every crash window, head stays live") {
     import spark.implicits._
     def t(h: Int) = Timestamp.valueOf(f"2024-01-01 $h%02d:00:00")
-    val target = Files.createTempDirectory("graft-compact-out").toString
+    val target = tempDir("graft-compact-out").toString
     val input = MemoryStream[(java.lang.Long, Long, String, Timestamp)](spark)
     val q = EventStreams.sessionLogSink(
       input.toDF.toDF("user_id", "event_id", "event_type", "ts"),

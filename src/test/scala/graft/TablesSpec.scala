@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** [[Tables]] infers each table's schema once per table version: a
   * repeated accessor call runs no footer-inference job, a table rewritten
   * in place is read again (never served a stale schema), the inference
@@ -18,7 +16,7 @@ class TablesSpec extends SparkSpec {
 
   test("a repeated accessor call runs no job; a rewrite at the same path is read again") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables-spec").toString
+    val dir = tempDir("graft-tables-spec").toString
     val path = s"$dir/part.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("p_partkey", "p_name")
       .write.mode("overwrite").parquet(path)
@@ -38,7 +36,7 @@ class TablesSpec extends SparkSpec {
 
   test("the size from the listing drives the scan fan-out") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables-fan").toString
+    val dir = tempDir("graft-tables-fan").toString
     (0L until 100L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     // one small file: fewer splits than cores, so the scan fans out
@@ -48,9 +46,32 @@ class TablesSpec extends SparkSpec {
     assert(Tables.scanSplits(spark, 128L * 1024 * 1024 + 1) == 2L)
   }
 
+  test("four small files on four cores are four splits and do not fan out; one small file does") {
+    import spark.implicits._
+    val dir = tempDir("graft-tables-files").toString
+    val path = s"$dir/documents.parquet"
+    val docs = (0L until 100L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
+    def fannedOut = Tables(spark, dir).documents.queryExecution.executedPlan.toString
+      .contains("hashpartitioning(doc_id")
+    assert(spark.sparkContext.defaultParallelism == 4)
+
+    docs.repartition(4).write.parquet(path)
+    val four = Tables.listing(spark, path)
+    assert(four.count(_._1.endsWith(".parquet")) == 4, four.mkString("\n"))
+    // the estimate is the split count Spark's own scan makes
+    assert(Tables.filePartitions(spark, four) == 4L)
+    assert(spark.read.parquet(path).rdd.getNumPartitions == 4)
+    assert(!fannedOut)
+
+    docs.coalesce(1).write.mode("overwrite").parquet(path)
+    assert(Tables.filePartitions(spark, Tables.listing(spark, path)) == 1L)
+    assert(spark.read.parquet(path).rdd.getNumPartitions == 1)
+    assert(fannedOut)
+  }
+
   test("flipping a parquet inference setting gives a separate cache entry") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables-conf").toString
+    val dir = tempDir("graft-tables-conf").toString
     Seq((1L, "a")).toDF("p_partkey", "p_name").write.parquet(s"$dir/part.parquet")
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     withConf(key -> "false")(assert(inferenceStages(spark, dir) > 0))
@@ -61,7 +82,7 @@ class TablesSpec extends SparkSpec {
 
   test("the listing of a partitioned table equals listFiles(path, recursive = true)") {
     import spark.implicits._
-    val path = Files.createTempDirectory("graft-tables-listing").resolve("t.parquet").toString
+    val path = tempDir("graft-tables-listing").resolve("t.parquet").toString
     (0L until 40L).map(i => (i, i % 3, i % 2 == 0)).toDF("id", "a", "b")
       .repartition(2).write.partitionBy("a", "b").parquet(path)
     val hp = new org.apache.hadoop.fs.Path(path)
@@ -80,7 +101,7 @@ class TablesSpec extends SparkSpec {
 
   test("the schema cache does not keep a dropped session alive") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-tables-gc").toString
+    val dir = tempDir("graft-tables-gc").toString
     Seq((1L, "a")).toDF("p_partkey", "p_name").write.parquet(s"$dir/part.parquet")
     // a separate session over the shared context, whose schema is then
     // cached, and which is then dropped; a method of its own, so no

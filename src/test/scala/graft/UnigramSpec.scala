@@ -111,7 +111,7 @@ class UnigramSpec extends SparkSpec {
   test("writeVocab/readVocab round-trips the artifact; corruption fails at load") {
     val p = Params(maxPieceLen = 4, minCount = 2L, seedSize = 40, emIters = 1, vocabSize = 48)
     val vocab = Unigram.learnVocab(corpus, "doc_id", "text", p)
-    val dir = java.nio.file.Files.createTempDirectory("graft-univocab").toString
+    val dir = tempDir("graft-univocab").toString
     Unigram.writeVocab(spark, vocab, dir)
     assert(Unigram.readVocab(spark, dir) == vocab)
     // counts under the reloaded artifact are bit-identical
