@@ -35,6 +35,11 @@ import org.apache.spark.sql.functions._
   * and `spanIngestStep` (substring window index) — previously proven
   * only by spec-level replay simulation.
   *
+  * Drill 8 halts an executor inside `Similarity.writeIvfIndex`'s stage
+  * write of an index rewrite: the previous version must stay readable
+  * until the commit, and the committed index must equal a no-failure
+  * build.
+  *
   * Prints ONE JSON line {"pass":…} and exits 0 (pass), 1 (mismatch), or
   * 2 (cluster never came up — environment, not code). Driven by
   * ExecutorLossSpec via a forked JVM.
@@ -575,9 +580,59 @@ object ChaosCheck {
         midMarkerLive == expectedLive && vacChaosAll == vacRefAll &&
         vacChaosNames == vacRefNames && vacChaosAll.nonEmpty
 
-      val pass =
-        prPass && ccPass && ingPass && ivfPass && spanPass && cdcPass && vacPass
-      println(s"""{"pass":$pass,"pagerank":{"pass":$prPass,"rounds":$prRounds,"killed":$prKilled,"nodes":${base.size}},"cc":{"pass":$ccPass,"cuts":$ccRounds,"killed":$ccKilled,"nodes":${ccBase.size}},"ingest":{"pass":$ingPass,"killed":$ingKilled,"classified":${chaosClass.size},"index_rows":${chaosIdx.size}},"ivf_ingest":{"pass":$ivfPass,"killed":$ivfKilled,"classified":${ivfChaosClass.size},"index_rows":${ivfChaosIdx.size}},"span_ingest":{"pass":$spanPass,"killed":$spanKilled,"classified":${spanChaosClass.size},"index_rows":${spanChaosIdx.size}},"cdc_store":{"pass":$cdcPass,"killed":$upsKilled,"snap_hook":$snapHookFired,"log_hook":$logHook,"live_pinned":$livePinned,"upsert_pass":$upsPass,"batchlog_pass":$logPass,"live_rows":${upsChaosLive.size},"log_rows":${logAfter.size}},"vacuum":{"pass":$vacPass,"held_lazy_failed":$heldLazyFailed,"asof_pruned":${asOf0Vacuumed.isEmpty},"marker_hook":$markerHookFired,"marker_served_base":$midMarkerIsBase}}""")
+      // drill 8: an IVF index REWRITE that loses an executor JVM inside
+      // its stage write. writeIvfIndex writes the new version into a
+      // fresh directory and commits it with one catalog call, so the
+      // halted task's retry completes the stage, the committed index
+      // must equal a no-failure build, and until the commit
+      // `spark.table` must serve the previous version. After the halt,
+      // one task holds the stage write open until a resume file exists,
+      // so the driver can read the live table mid-write.
+      val rwDir = tempDir("rewrite")
+      val rwKill = rwDir.resolve("killed").toString
+      val rwHold = rwDir.resolve("held").toString
+      val rwResume = rwDir.resolve("resume").toString
+      val rwRows = (0L until 40L).map(i => (i, Seq(math.cos(i * 0.3), math.sin(i * 0.3))))
+      def chaosRewriteBatch(rows: Seq[(Long, Seq[Double])]): DataFrame =
+        spark.createDataset(rows).repartition(2)
+          .map { case (id, v) =>
+            def claim(f: String): Boolean =
+              try { java.nio.file.Files.createFile(java.nio.file.Paths.get(f)); true }
+              catch { case _: java.nio.file.FileAlreadyExistsException => false }
+            if (claim(rwKill)) Runtime.getRuntime.halt(99)
+            else if (claim(rwHold)) {
+              val until = System.nanoTime() + 180L * 1000000000L
+              while (!java.nio.file.Files.exists(java.nio.file.Paths.get(rwResume)) &&
+                  System.nanoTime() < until) Thread.sleep(100)
+            }
+            (id, v)
+          }.toDF("vec_id", "vec")
+      graft.operators.Similarity.writeIvfIndex(vecSeed.toDF("vec_id", "vec"),
+        "vec_id", "vec", centroids, "chaos_rw", numBuckets = 2)
+      graft.operators.Similarity.writeIvfIndex(rwRows.toDF("vec_id", "vec"),
+        "vec_id", "vec", centroids, "chaos_rw_ref", numBuckets = 2)
+      val rwPrev = collectAll(spark.table("chaos_rw"))
+      val rewrite = scala.concurrent.Future(
+        graft.operators.Similarity.writeIvfIndex(chaosRewriteBatch(rwRows),
+          "vec_id", "vec", centroids, "chaos_rw", numBuckets = 2))(
+        scala.concurrent.ExecutionContext.global)
+      val holdBy = System.nanoTime() + 300L * 1000000000L
+      while (!java.nio.file.Files.exists(java.nio.file.Paths.get(rwHold)) &&
+          !rewrite.isCompleted && System.nanoTime() < holdBy) Thread.sleep(200)
+      val rwHeld = java.nio.file.Files.exists(java.nio.file.Paths.get(rwHold)) &&
+        !rewrite.isCompleted
+      val rwMid = scala.util.Try(collectAll(spark.table("chaos_rw"))).toOption
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(rwResume))
+      scala.concurrent.Await.result(rewrite, scala.concurrent.duration.Duration(10, "min"))
+      val rwKilled = java.nio.file.Files.exists(java.nio.file.Paths.get(rwKill))
+      val rwHeldPrev = rwHeld && rwMid.contains(rwPrev)
+      val rwAfter = collectAll(spark.table("chaos_rw"))
+      val rwPass = rwKilled && rwHeldPrev && rwAfter == collectAll(spark.table("chaos_rw_ref")) &&
+        rwAfter.size == rwRows.size && rwAfter != rwPrev
+
+      val pass = prPass && ccPass && ingPass && ivfPass && spanPass && cdcPass && vacPass &&
+        rwPass
+      println(s"""{"pass":$pass,"pagerank":{"pass":$prPass,"rounds":$prRounds,"killed":$prKilled,"nodes":${base.size}},"cc":{"pass":$ccPass,"cuts":$ccRounds,"killed":$ccKilled,"nodes":${ccBase.size}},"ingest":{"pass":$ingPass,"killed":$ingKilled,"classified":${chaosClass.size},"index_rows":${chaosIdx.size}},"ivf_ingest":{"pass":$ivfPass,"killed":$ivfKilled,"classified":${ivfChaosClass.size},"index_rows":${ivfChaosIdx.size}},"span_ingest":{"pass":$spanPass,"killed":$spanKilled,"classified":${spanChaosClass.size},"index_rows":${spanChaosIdx.size}},"cdc_store":{"pass":$cdcPass,"killed":$upsKilled,"snap_hook":$snapHookFired,"log_hook":$logHook,"live_pinned":$livePinned,"upsert_pass":$upsPass,"batchlog_pass":$logPass,"live_rows":${upsChaosLive.size},"log_rows":${logAfter.size}},"vacuum":{"pass":$vacPass,"held_lazy_failed":$heldLazyFailed,"asof_pruned":${asOf0Vacuumed.isEmpty},"marker_hook":$markerHookFired,"marker_served_base":$midMarkerIsBase},"ivf_rewrite":{"pass":$rwPass,"killed":$rwKilled,"held_previous":$rwHeldPrev,"index_rows":${rwAfter.size}}}""")
       pass
     } finally cleanUp()
     if (!passed) sys.exit(1)

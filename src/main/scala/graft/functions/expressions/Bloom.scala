@@ -201,6 +201,23 @@ object Bloom {
     true
   }
 
+  /** Filter size for `rows` keys: the smallest power of two >= 16 bits
+    * per key and >= 64 (a ~0.24% false-positive rate at k = 4). */
+  def bitsFor(rows: Long): Long =
+    java.lang.Long.highestOneBit(math.max(64L, 16L * rows) - 1) << 1
+
+  /** Filter `bytes` folded down to `numBits` (a power of two >= 64) by
+    * OR-ing its upper half onto its lower half: bits are addressed
+    * `& (numBits - 1)`, so the result equals the filter an [[agg]] at
+    * `numBits` builds over the same keys. */
+  @annotation.tailrec
+  def fold(bytes: Array[Byte], numBits: Int): Array[Byte] =
+    if (bytes.length * 8 <= numBits) bytes
+    else {
+      val h = bytes.length / 2
+      fold(Array.tabulate(h)(i => (bytes(i) | bytes(i + h)).toByte), numBits)
+    }
+
   /** `bloomAgg(keyCol)` in an `agg(...)`: build the filter's bytes. */
   def agg(c: Column, numBits: Int = 1 << 23, numHashes: Int = 4): Column =
     ColumnBridge.column(

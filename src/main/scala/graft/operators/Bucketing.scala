@@ -1,141 +1,138 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
+import org.apache.spark.sql.functions.col
 
-/** Bucketed-table support — the shuffle-elimination story for repeated
-  * large-to-large joins (builder brief: "bucketing for co-located
-  * joins").
+/** Bucketed tables: writing a table hash-partitioned into a fixed bucket
+  * count and sorted within buckets pays the key shuffle ONCE; every later
+  * equi-join or aggregation on the bucket key plans with zero Exchange.
+  * Keep the bucket count identical on both join sides. Frames has no
+  * storage layer (`src/Frames/InCore.hs`); the persisted indexes of
+  * `Similarity`, `Dedup`, `TfIdf`, `Graph`, `Linkage` and `Multimodal`
+  * are built on this one.
   *
-  * At 100 TB the dominant cost of a fact-to-fact join is shuffling both
-  * sides on the key. Writing both tables bucketed (hash-partitioned into
-  * a fixed bucket count, sorted within buckets) pays that shuffle ONCE at
-  * write time; every subsequent equi-join or aggregation on the bucket
-  * key plans with zero Exchange — Catalyst recognizes the matching
-  * `HashPartitioning(outputPartitioning)` and goes straight to SortMergeJoin
-  * over co-located buckets. Pick a bucket count that divides the target
-  * cluster's parallelism (e.g. 4x executors) and keep it IDENTICAL on
-  * both join sides — mismatched counts re-shuffle the smaller side.
-  *
-  * The reference has no storage layer at all (in-memory vectors,
-  * acowley/Frames `src/Frames/InCore.hs`); this is Spark-native
-  * infrastructure the 100 TB deployment needs.
-  */
+  * Every rewrite (build, purge, compaction) goes through [[writeBucketed]]:
+  *   - stage: the rows are written as an external `<table>__stage` table
+  *     in a fresh `<default location>__v<uuid>` directory. A failed write
+  *     deletes that directory and leaves the live table as it was;
+  *   - commit: one catalog call points the live MANAGED table at the
+  *     staged directory (`alterTable`, or `createTable` for a new table);
+  *     then the relation is refreshed, the stage entry dropped and the
+  *     previous version's directory deleted.
+  * Tables staged in one call commit only after all of them were written.
+  * Appends add files to the live directory. Single-writer, like every
+  * index mutation here. */
 object Bucketing {
 
-  /** Write `df` as a bucketed+sorted managed table (parquet). Any stale
-    * table of the same name is dropped AND its warehouse location
-    * cleared first: with the in-memory catalog, a restarted session
-    * forgets the table while its directory persists, and a bare
-    * `saveAsTable` then fails with LOCATION_ALREADY_EXISTS. */
+  /** One table of a [[writeBucketed]] call: `df` bucketed by
+    * `bucketCols`, sorted within buckets by `sortCols` (default: the
+    * bucket columns). `df` may read the table it replaces. */
+  final case class Target(
+      df: DataFrame,
+      table: String,
+      bucketCols: Seq[String],
+      sortCols: Seq[String] = Nil)
+
+  /** Replace (or create) one bucketed+sorted managed parquet table. */
   def writeBucketed(
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)))
-    val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(loc)) fs.delete(loc, true): Unit
-    val sorted = if (sortCols.isEmpty) bucketCols else sortCols
-    // zstd for index files (guide §6), decided by a round-16 sf1 A/B:
-    // 36% smaller than snappy on the vector-payload IVF index (4.60 vs
-    // 7.16 MB) with probe wall time flat (s05 2.097 vs 2.094 s, d26
-    // within the host's drift) — at scale the ratio is read bandwidth
-    // and storage, the probe pays nothing
-    clusterByBucket(df, bucketCols, numBuckets).write
-      .format("parquet")
-      .option("compression", "zstd")
-      .mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(sorted.head, sorted.tail: _*)
-      .saveAsTable(table)
+      sortCols: Seq[String] = Nil): Unit =
+    writeBucketed(numBuckets, Target(df, table, bucketCols, sortCols))
+
+  /** Replace (or create) several bucketed tables together: each is
+    * staged in turn, and none is committed unless all were staged. */
+  def writeBucketed(numBuckets: Int, targets: Target*): Unit = {
+    val staged = scala.collection.mutable.ArrayBuffer.empty[Target]
+    try targets.foreach { t => stage(t, numBuckets); staged += t }
+    catch {
+      case e: Throwable => staged.foreach(t => dropStage(t.df.sparkSession, t.table)); throw e
+    }
+    staged.foreach(t => commit(t.df.sparkSession, t.table))
   }
 
-  /** Cluster `df` by the bucket key before a bucketed write (round 15,
-    * guide §6 file sizing): a bucketed write emits one file per
-    * (input task × bucket id it holds), so a W-partition upstream
-    * yields up to W×numBuckets files — tiny files whose per-open cost
-    * every probe pays. Repartitioning into numBuckets partitions on the
-    * bucket columns uses the SAME murmur3 `pmod` placement as the
-    * bucket spec, so each task holds exactly one bucket and each
-    * write emits exactly numBuckets files regardless of upstream
-    * layout. Costs one keyed shuffle of the index rows — the shuffle
-    * bucketing conceptually implies anyway. */
-  private def clusterByBucket(
-      df: DataFrame,
-      bucketCols: Seq[String],
-      numBuckets: Int): DataFrame =
-    df.repartition(numBuckets,
-      bucketCols.map(org.apache.spark.sql.functions.col): _*)
+  private def stageId(table: String) = TableIdentifier(s"${table}__stage")
 
-  /** APPEND to an existing bucketed table with the SAME bucket spec —
-    * the index-maintenance path: each append writes its own set of
-    * bucket files (Spark reads all files of a bucket together), so new
-    * corpus rows join the index without rewriting it. One keyed shuffle
-    * of the NEW rows only; the existing table is untouched. Spark
-    * validates that the bucket spec matches the table's. */
+  private def location(spark: SparkSession, id: TableIdentifier): Option[Path] =
+    Option.when(spark.sessionState.catalog.tableExists(id))(
+      new Path(spark.sessionState.catalog.getTableMetadata(id).location))
+
+  private def delete(spark: SparkSession, dir: Path): Unit =
+    dir.getFileSystem(spark.sessionState.newHadoopConf()).delete(dir, true): Unit
+
+  /** Drop the stage entry and its directory, unless the live table
+    * already points there (a crash after the commit's catalog call). */
+  private def dropStage(spark: SparkSession, table: String): Unit =
+    location(spark, stageId(table)).foreach { dir =>
+      spark.sessionState.catalog.dropTable(stageId(table), ignoreIfNotExists = true, purge = false)
+      if (!location(spark, TableIdentifier(table)).contains(dir)) delete(spark, dir)
+    }
+
+  private def stage(t: Target, numBuckets: Int): Unit = {
+    val spark = t.df.sparkSession
+    dropStage(spark, t.table) // left behind by a crashed attempt
+    val dir = new Path(spark.sessionState.catalog.defaultTablePath(
+      TableIdentifier(t.table)).toString + s"__v${java.util.UUID.randomUUID}")
+    try writer(t.df, t.bucketCols, numBuckets, t.sortCols)
+      .mode(SaveMode.ErrorIfExists).option("path", dir.toString)
+      .saveAsTable(stageId(t.table).table)
+    catch { case e: Throwable => delete(spark, dir); throw e }
+  }
+
+  private def commit(spark: SparkSession, table: String): Unit = {
+    val catalog = spark.sessionState.catalog
+    val staged = catalog.getTableMetadata(stageId(table))
+    val live = staged.copy(identifier = staged.identifier.copy(table = table),
+      tableType = CatalogTableType.MANAGED)
+    val previous = location(spark, TableIdentifier(table))
+    if (previous.isDefined) catalog.alterTable(live)
+    else catalog.createTable(live, ignoreIfExists = false, validateLocation = false)
+    spark.catalog.refreshTable(s"`$table`")
+    catalog.dropTable(stageId(table), ignoreIfNotExists = true, purge = false)
+    previous.filterNot(_ == new Path(staged.location)).foreach(delete(spark, _))
+  }
+
+  /** `df` clustered by the bucket key (the SAME murmur3 `pmod` placement
+    * as the bucket spec, so a write emits one file per bucket whatever
+    * the upstream layout), as a bucketed+sorted zstd parquet writer.
+    * zstd, from a round-16 sf1 A/B: the IVF index was 36% smaller than
+    * with snappy (4.60 vs 7.16 MB), probe time flat. */
+  private def writer(df: DataFrame, keys: Seq[String], numBuckets: Int, sortCols: Seq[String]) = {
+    val sorted = if (sortCols.isEmpty) keys else sortCols
+    df.repartition(numBuckets, keys.map(col): _*).write
+      .format("parquet")
+      .option("compression", "zstd")
+      .bucketBy(numBuckets, keys.head, keys.tail: _*)
+      .sortBy(sorted.head, sorted.tail: _*)
+  }
+
+  /** APPEND to an existing bucketed table with the SAME bucket spec:
+    * each append writes its own set of bucket files into the live
+    * directory (Spark reads all files of a bucket together), so new rows
+    * join the index without rewriting it. Spark validates the spec. */
   def appendBucketed(
       df: DataFrame,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    val sorted = if (sortCols.isEmpty) bucketCols else sortCols
-    // zstd: same measured decision as writeBucketed
-    clusterByBucket(df, bucketCols, numBuckets).write
-      .format("parquet")
-      .option("compression", "zstd")
-      .mode(SaveMode.Append)
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(sorted.head, sorted.tail: _*)
-      .saveAsTable(table)
-  }
+      sortCols: Seq[String] = Nil): Unit =
+    writer(df, bucketCols, numBuckets, sortCols).mode(SaveMode.Append).saveAsTable(table)
 
-  /** REPLACE a bucketed table's contents with `df` (which may — and in
-    * the purge paths does — read from the table being replaced): the
-    * new contents are fully materialized into a temporary bucketed
-    * table FIRST, then the original is dropped and the temporary
-    * renamed into place. Spark forbids overwriting a table from a plan
-    * that reads it, and a mid-write crash must not destroy the only
-    * copy — the same write-then-swap discipline as the streaming
-    * snapshot store, at catalog granularity. Single-writer maintenance
-    * step, like every index mutation here. */
-  def replaceBucketed(
-      df: DataFrame,
-      table: String,
-      bucketCols: Seq[String],
-      numBuckets: Int,
-      sortCols: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    val tmp = s"${table}__swap"
-    writeBucketed(df, tmp, bucketCols, numBuckets, sortCols)
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    spark.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
-  }
-
-  /** COMPACT an append-accumulated bucketed table: every
-    * [[appendBucketed]] writes its own set of per-bucket files, so an
-    * index appended N times reads N files per bucket — the small-file
-    * tax every append-only store pays, and at 100 TB the thing that
-    * slowly erodes probe latency and NameNode/listing health. This
-    * rewrites the table's current contents once
-    * ([[replaceBucketed]]'s materialize-then-swap), collapsing each
-    * bucket back to a single sorted file; contents, bucket spec, and
-    * probe plans (bucket pruning included) are unchanged — pinned in
-    * BucketingSpec. Run it on the maintenance cadence, between appends,
-    * under the same single-writer contract; cost is one scan + one
-    * bucketed write of the live rows, the same as the original build. */
+  /** COMPACT an append-accumulated table back to one sorted file per
+    * bucket: a [[writeBucketed]] of its own rows. Contents, bucket spec
+    * and probe plans (bucket pruning included) are unchanged. */
   def compactBucketed(
       spark: SparkSession,
       table: String,
       bucketCols: Seq[String],
       numBuckets: Int,
       sortCols: Seq[String] = Nil): Unit =
-    replaceBucketed(spark.table(table), table, bucketCols, numBuckets, sortCols)
+    writeBucketed(spark.table(table), table, bucketCols, numBuckets, sortCols)
 
   /** Join two tables bucketed on the same key with the same bucket count:
     * plans with no Exchange on either side. */

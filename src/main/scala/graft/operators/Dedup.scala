@@ -412,7 +412,9 @@ object Dedup {
     *     (band, bh);
     *   - `<table>_texts`: (id, text), bucketed by id — candidate
     *     verification re-reads only matched ids' buckets.
-    * The text/shingle pass over the corpus is paid HERE, once. */
+    * The text/shingle pass over the corpus is paid HERE, once. The three
+    * tables are committed together after all three are written, so a
+    * failed rebuild leaves the previous index whole. */
   def writeDedupIndex(
       corpus: DataFrame,
       idCol: String,
@@ -426,14 +428,15 @@ object Dedup {
     val corpusNorm = corpus
       .select(normText(col(textCol)).as("__n"), col(idCol).as("__cid"))
       .groupBy(col("__n")).agg(min(col("__cid")).as("__exact_of"))
-    Bucketing.writeBucketed(corpusNorm, s"${table}_exact", Seq("__n"), numBuckets)
-    Bucketing.writeBucketed(
-      bandedKeys(corpus, idCol, textCol, shingleSize, numHashes, bands, seed)
-        .select(col("band"), col("bh"), col(idCol).as("__cid")),
-      s"${table}_bands", Seq("band", "bh"), numBuckets)
-    Bucketing.writeBucketed(
-      corpus.select(col(idCol).as("__cid"), col(textCol).as("__tc")),
-      s"${table}_texts", Seq("__cid"), numBuckets)
+    Bucketing.writeBucketed(numBuckets,
+      Bucketing.Target(corpusNorm, s"${table}_exact", Seq("__n")),
+      Bucketing.Target(
+        bandedKeys(corpus, idCol, textCol, shingleSize, numHashes, bands, seed)
+          .select(col("band"), col("bh"), col(idCol).as("__cid")),
+        s"${table}_bands", Seq("band", "bh")),
+      Bucketing.Target(
+        corpus.select(col(idCol).as("__cid"), col(textCol).as("__tc")),
+        s"${table}_texts", Seq("__cid")))
   }
 
   /** APPEND a committed batch to a persisted [[writeDedupIndex]] — the
@@ -503,13 +506,13 @@ object Dedup {
     * index tables are never shuffled for the filtering); the ownership
     * repair re-normalizes the surviving texts in ONE scan, pruned by a
     * broadcast semi-join to the affected norms (proportional to the
-    * purge, not the index). Each table then rewrites via
-    * [[Bucketing.replaceBucketed]] — one materialize-then-swap per
-    * table, `_exact` first while `_texts` still holds the pre-purge
-    * rows its repair reads. Rewriting surviving rows is the inherent
-    * cost of physical deletion in immutable storage (the same cost a
-    * compaction pays); ids are assumed unique corpus-wide, and the
-    * single-writer contract of every index mutation applies. */
+    * purge, not the index). The three tables then rewrite in ONE
+    * [[Bucketing.writeBucketed]] call: all three are staged from the
+    * pre-purge rows before any is committed, so a failed purge leaves
+    * the whole index at its previous version. Rewriting surviving rows
+    * is the inherent cost of physical deletion in immutable storage (the
+    * same cost a compaction pays); ids are assumed unique corpus-wide,
+    * and the single-writer contract of every index mutation applies. */
   def purgeDedupIndex(
       spark: SparkSession,
       table: String,
@@ -532,10 +535,10 @@ object Dedup {
       .select(normText(col("__tc")).as("__n"), col("__cid"))
       .join(broadcast(affected.select(col("__n"))), Seq("__n"), "left_semi")
       .groupBy(col("__n")).agg(min(col("__cid")).as("__exact_of"))
-    Bucketing.replaceBucketed(
-      kept.unionByName(reowned), s"${table}_exact", Seq("__n"), numBuckets)
-    Bucketing.replaceBucketed(bandsKept, s"${table}_bands", Seq("band", "bh"), numBuckets)
-    Bucketing.replaceBucketed(textsKept, s"${table}_texts", Seq("__cid"), numBuckets)
+    Bucketing.writeBucketed(numBuckets,
+      Bucketing.Target(kept.unionByName(reowned), s"${table}_exact", Seq("__n")),
+      Bucketing.Target(bandsKept, s"${table}_bands", Seq("band", "bh")),
+      Bucketing.Target(textsKept, s"${table}_texts", Seq("__cid")))
   }
 
   /** PERSIST the corpus's stride-1 window-hash set — the incremental

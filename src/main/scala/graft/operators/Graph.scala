@@ -709,10 +709,9 @@ object Graph {
       itemCol: String,
       numBuckets: Int = 8): Unit = {
     val ui = uiDistinct(interactions, userCol, itemCol)
-    Bucketing.writeBucketed(ui, s"${table}_profile", Seq("__u"), numBuckets)
-    Bucketing.writeBucketed(
-      orient(pairDeltas(ui, ui.limit(0))),
-      s"${table}_pairs", Seq("item"), numBuckets)
+    Bucketing.writeBucketed(numBuckets,
+      Bucketing.Target(ui, s"${table}_profile", Seq("__u")),
+      Bucketing.Target(orient(pairDeltas(ui, ui.limit(0))), s"${table}_pairs", Seq("item")))
   }
 
   /** Append a batch of interactions to a [[writeCooccurrenceIndex]] —
@@ -758,7 +757,7 @@ object Graph {
       orient(pairDeltas(gone, gone.limit(0)))
         .withColumn("w", -col("w")),
       s"${table}_pairs", Seq("item"), numBuckets)
-    Bucketing.replaceBucketed(
+    Bucketing.writeBucketed(
       prof.join(broadcast(us), Seq("__u"), "left_anti"),
       s"${table}_profile", Seq("__u"), numBuckets)
   }

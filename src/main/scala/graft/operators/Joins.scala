@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{abs, broadcast, col, last, levenshtein, lit, struct, unix_micros, when}
+import org.apache.spark.sql.functions.{abs, broadcast, col, count, last, levenshtein, lit, struct, unix_micros, when}
 
 /** Multi-column equi-joins on identically-named columns, mirroring the
   * reference's four joins (acowley/Frames `src/Frames/Joins.hs:44-249`):
@@ -97,10 +97,12 @@ object Joins {
     * Spark's `InjectRuntimeFilter` does this automatically only under
     * narrow preconditions (creation-side selective filter, size
     * thresholds); this operator makes the pattern deterministic and
-    * composable. Keys are fingerprinted with xxhash64 (any arity/type);
-    * at 100 TB the build side ships `numBits/8` bytes (1 MB default) to
-    * each task while the fact side's shuffle shrinks by the right side's
-    * key selectivity — the canonical semi-join reduction. */
+    * composable. Keys are fingerprinted with xxhash64 (any arity/type).
+    * The filter is sized from the build side: 16 bits per right-side row
+    * (at least 64, rounded up to a power of two), capped at `numBits`
+    * (1 MB default), so each task receives a filter proportional to the
+    * build side while the fact side's shuffle shrinks by its key
+    * selectivity — the canonical semi-join reduction. */
   def bloomPrunedJoin(
       keys: Seq[String],
       numBits: Int = 1 << 23,
@@ -120,7 +122,11 @@ object Joins {
     // them as a cross-joined binary COLUMN instead is a trap:
     // UnsafeRow.getBinary copies the whole array per probed row — a 1 MB
     // filter times the fact-side row count of memcpy.
-    val bytes = r.agg(Bloom.agg(fp, numBits, numHashes)).head.getAs[Array[Byte]](0)
+    // The same aggregate counts the build rows; the filter is then
+    // folded down to its size (Bloom.fold: equal to one built there).
+    val built = r.agg(Bloom.agg(fp, numBits, numHashes), count(lit(1))).head
+    val bytes = Bloom.fold(built.getAs[Array[Byte]](0),
+      math.min(numBits.toLong, Bloom.bitsFor(built.getLong(1))).toInt)
     l.filter(Bloom.mightContainLit(bytes, fp, numHashes))
       .join(r, keys, how)
   }

@@ -352,9 +352,9 @@ object Similarity {
     * gates it against the DuckDB oracle). The purge set broadcasts into
     * the LEFT ANTI (it builds the RIGHT side), the index is scanned but
     * never shuffled for the filter, and the surviving rows rewrite via
-    * [[Bucketing.replaceBucketed]] — materialize-then-swap, the
-    * inherent cost of physical deletion in immutable storage.
-    * Single-writer batch step. */
+    * [[Bucketing.writeBucketed]] — staged, then committed, the inherent
+    * cost of physical deletion in immutable storage. Single-writer
+    * batch step. */
   def purgeIvfIndex(
       spark: SparkSession,
       table: String,
@@ -363,7 +363,7 @@ object Similarity {
     val ids = purgeIds
       .select(col(purgeIds.columns.head).cast("long").as("__pid")).distinct()
     val idx = spark.table(table)
-    Bucketing.replaceBucketed(
+    Bucketing.writeBucketed(
       idx.join(broadcast(ids), idx("neighbor_id") === ids("__pid"), "left_anti"),
       table, bucketCols = Seq("cell"), numBuckets = numBuckets,
       sortCols = Seq("cell", "neighbor_id"))

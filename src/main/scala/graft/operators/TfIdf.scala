@@ -306,9 +306,10 @@ object TfIdf {
       table: String,
       numBuckets: Int = 32): Unit = {
     val (uni, big, tri) = lmCounts(train, textCol)
-    Bucketing.writeBucketed(uni, s"${table}_uni", Seq("__w"), numBuckets)
-    Bucketing.writeBucketed(big, s"${table}_big", Seq("__g2"), numBuckets)
-    Bucketing.writeBucketed(tri, s"${table}_tri", Seq("__g3"), numBuckets)
+    Bucketing.writeBucketed(numBuckets,
+      Bucketing.Target(uni, s"${table}_uni", Seq("__w")),
+      Bucketing.Target(big, s"${table}_big", Seq("__g2")),
+      Bucketing.Target(tri, s"${table}_tri", Seq("__g3")))
   }
 
   /** APPEND a batch's counts to a persisted LM index. Counts are
@@ -343,7 +344,7 @@ object TfIdf {
     * rebuild over the survivors would leave it (purge ≡ rebuild pinned
     * in BucketingSpec). Contrast with the dedup/IVF purges, which must
     * rewrite survivor rows ([[graft.operators.Bucketing
-    * .replaceBucketed]]): additive state never needs the rewrite. The
+    * .writeBucketed]]): additive state never needs the rewrite. The
     * caller is responsible for purging each document AT MOST once (a
     * double purge would drive net counts negative — same single-writer
     * ledger discipline as every index mutation here); compact the

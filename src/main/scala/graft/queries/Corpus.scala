@@ -2324,9 +2324,9 @@ $langScoreCols
       val emb = Tables(s, dir).embeddings
       val centroids = Similarity.sampleCentroids(emb, "vec_id", "embedding", nCells = 16)
       // pid-suffixed like CsvQueries.scratchDir: separate in-memory-catalog
-      // sessions share one spark-warehouse dir, and writeBucketed DROPs +
-      // deletes the location — concurrent harness runs over the same sf dir
-      // must not delete each other's live index files mid-probe.
+      // sessions may share one warehouse directory, and concurrent harness
+      // runs over the same sf dir must not stage into or delete each
+      // other's index versions (`<table>__v<uuid>`) mid-probe.
       val table = s"graft_ivf_idx_${Integer.toHexString(dir.hashCode)}" +
         s"_p${ProcessHandle.current().pid()}"
       Similarity.writeIvfIndex(emb, "vec_id", "embedding", centroids, table)

@@ -83,6 +83,34 @@ class BloomSpec extends SparkSpec {
     }
   }
 
+  test("a folded filter is bitwise equal to one built at the smaller size") {
+    val keys = (1L to 3000L).map(_ * 2654435761L).toDF("k")
+    def built(bits: Int) = keys.agg(Bloom.agg(col("k"), numBits = bits)).head.getAs[Array[Byte]](0)
+    val big = built(1 << 16)
+    for (bits <- Seq(1 << 16, 1 << 12, 1 << 7, 64))
+      assert(Bloom.fold(big, bits).toSeq == built(bits).toSeq, s"fold to $bits bits")
+    assert(Seq(0L, 1L, 4L, 5L, 186L, 1L << 20).map(Bloom.bitsFor) ==
+      Seq(64L, 64L, 64L, 128L, 4096L, 1L << 24))
+  }
+
+  test("q55's filter literal is sized from its build side, not the 2^23-bit cap") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.expressions.BloomMightContain
+    val q55 = graft.queries.Relational.q55_bloom_join.run(spark, sf0001)
+    val literalBytes = q55.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case BloomMightContain(Literal(b: Array[Byte], _), _, _) => b.length
+      }))
+    val buildRows = Tables(spark, sf0001).orders
+      .filter(col("o_orderdate") >= expr("timestamp'1995-03-01 00:00:00'")
+        && col("o_orderdate") < expr("timestamp'1995-04-01 00:00:00'"))
+      .count()
+    assert(buildRows > 0)
+    assert(literalBytes.nonEmpty && literalBytes.forall(_ == Bloom.bitsFor(buildRows) / 8),
+      s"literal bytes $literalBytes for $buildRows build rows")
+    assert(literalBytes.forall(_ < (1 << 23) / 8))
+  }
+
   // ---------------- persisted union ----------------
 
   test("filter-per-batch + bloom_union == direct filter, byte-exact; idempotent") {

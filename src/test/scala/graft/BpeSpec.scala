@@ -243,6 +243,30 @@ class BpeSpec extends SparkSpec {
     counts.toMap
   }
 
+  test("every candidate collect plans as a TakeOrderedAndProject over the cached vocabulary") {
+    import spark.implicits._
+    // learnMerges releases the previous round's cache right after the
+    // candidate collect, assuming that collect computed every partition
+    // of the current (lazily persisted) vocabulary: a global top-k does,
+    // an incremental CollectLimit would not
+    val docs = Seq(
+      (1L, "the cat sat on the mat"),
+      (2L, "the cat ate the rat"),
+      (3L, "that cat is the best cat"),
+      (4L, "rats and cats chat")).toDF("doc_id", "text")
+    // the other actions are the lazy lineage cuts' checkpoints
+    val collects = capturePlans {
+      Bpe.learnMerges(docs, "doc_id", "text", numMerges = 6): Unit
+    }.map(_.executedPlan.toString)
+      .filter(p => p.contains("TakeOrderedAndProject") || p.contains("CollectLimit"))
+    assert(collects.size >= 6, s"one candidate collect per round expected:\n${collects.mkString("\n")}")
+    collects.foreach { p =>
+      assert(p.contains("TakeOrderedAndProject") && !p.contains("CollectLimit"), p)
+      assert(p.contains("InMemoryTableScan") || p.contains("Scan ExistingRDD"),
+        s"the candidate collect does not read the persisted vocabulary:\n$p")
+    }
+  }
+
   test("batched learning equals the identically-parameterized local twin; m=1 equals classic") {
     import spark.implicits._
     val docs = Seq(

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.functions._
 import graft.operators.{Bucketing, Dedup, Similarity}
 
@@ -79,14 +82,37 @@ class BucketingSpec extends SparkSpec {
       spark.sql(s"DROP TABLE IF EXISTS dedup_idx_spec$s"))
   }
 
-  /** Data files currently under a managed table's warehouse location. */
+  /** Data files currently under a table's catalog location. */
   private def tableFiles(table: String): Set[String] = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)))
+    val loc = new Path(spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).location)
     val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(loc).map(_.getPath.getName).filter(_.startsWith("part-")).toSet
   }
+
+  /** Every directory of the warehouse that belongs to `table`: its
+    * default location and the versions and stages beside it. */
+  private def tableDirs(table: String): Set[String] = {
+    val default = new Path(
+      spark.sessionState.catalog.defaultTablePath(TableIdentifier(table)))
+    val fs = default.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.listStatus(default.getParent).map(_.getPath.getName)
+      .filter(n => n == default.getName || n.startsWith(default.getName + "__")).toSet
+  }
+
+  /** `table` is one committed version: a MANAGED table with its bucket
+    * spec, no stage entry, and no directory but its own. */
+  private def assertOneVersion(table: String, numBuckets: Int): Unit = {
+    val catalog = spark.sessionState.catalog
+    val meta = catalog.getTableMetadata(TableIdentifier(table))
+    assert(meta.tableType == CatalogTableType.MANAGED, s"$table: ${meta.tableType}")
+    assert(meta.bucketSpec.map(_.numBuckets).contains(numBuckets), s"$table: ${meta.bucketSpec}")
+    assert(!catalog.tableExists(TableIdentifier(s"${table}__stage")), s"$table: stage entry left")
+    assert(tableDirs(table) == Set(new Path(meta.location).getName),
+      s"$table: ${tableDirs(table)} beside ${meta.location}")
+  }
+
+  private def rows(table: String): Seq[String] =
+    spark.table(table).collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
   /** No scan of `table` may sit under a REPARTITIONING ShuffleExchange
     * (hash/range) before reaching its join — the index side of a
@@ -176,31 +202,18 @@ class BucketingSpec extends SparkSpec {
     Dedup.writeDedupIndex(
       corpus.filter(col("doc_id") <= mid), "doc_id", "text", "ded_app", numBuckets = 8)
     Dedup.writeDedupIndex(corpus, "doc_id", "text", "ded_reb", numBuckets = 8)
-    // capture the executed plans of the append's write jobs: the exact
-    // map's already-present check must never shuffle the index side
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan): Unit
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
       val before = tableFiles("ded_app_exact")
-      Dedup.appendDedupIndex(spark, "ded_app",
-        corpus.filter(col("doc_id") > mid), "doc_id", "text", numBuckets = 8)
-      // listener delivery is async — wait for the write plans to arrive
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (plans.size() < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+      // the executed plans of the append's write jobs: the exact map's
+      // already-present check must never shuffle the index side
+      val appendPlans = capturePlans {
+        Dedup.appendDedupIndex(spark, "ded_app",
+          corpus.filter(col("doc_id") > mid), "doc_id", "text", numBuckets = 8)
+      }.map(_.executedPlan)
       val after = tableFiles("ded_app_exact")
       // append-only: every pre-append data file survives, new ones arrive
       assert(before.subsetOf(after), s"append rewrote existing index files")
       assert(after.size > before.size, "append added no files")
-      val appendPlans = plans.toArray(Array.empty[
-        org.apache.spark.sql.execution.SparkPlan])
       assert(appendPlans.nonEmpty)
       appendPlans.foreach(assertIndexUnshuffled(_, "ded_app_exact"))
 
@@ -212,12 +225,9 @@ class BucketingSpec extends SparkSpec {
         spark, "ded_reb", batch, "doc_id", "text"))
       assert(viaAppend == viaRebuild, "append diverged from rebuild")
       assert(viaAppend.nonEmpty)
-    } finally {
-      spark.listenerManager.unregister(listener)
-      Seq("ded_app", "ded_reb").foreach(t =>
-        Seq("_exact", "_bands", "_texts").foreach(s =>
-          spark.sql(s"DROP TABLE IF EXISTS $t$s")))
-    }
+    } finally Seq("ded_app", "ded_reb").foreach(t =>
+      Seq("_exact", "_bands", "_texts").foreach(s =>
+        spark.sql(s"DROP TABLE IF EXISTS $t$s")))
   }
 
   test("appendDedupIndex keeps the FIRST owner when a later batch reuses a text") {
@@ -440,29 +450,17 @@ class BucketingSpec extends SparkSpec {
     Dedup.writeSpanIndex(corpus.filter(col("doc_id") <= mid),
       "doc_id", "text", "span_app", numBuckets = 8)
     Dedup.writeSpanIndex(corpus, "doc_id", "text", "span_reb", numBuckets = 8)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
-        plans.add(qe.executedPlan): Unit
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
     try {
       val before = tableFiles("span_app_spans")
-      Dedup.appendSpanIndex(spark, "span_app",
-        corpus.filter(col("doc_id") > mid), "doc_id", "text", numBuckets = 8)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (plans.size() < 1 && System.nanoTime() < deadline) Thread.sleep(50)
+      val appendPlans = capturePlans {
+        Dedup.appendSpanIndex(spark, "span_app",
+          corpus.filter(col("doc_id") > mid), "doc_id", "text", numBuckets = 8)
+      }.map(_.executedPlan)
       val after = tableFiles("span_app_spans")
       assert(before.subsetOf(after) && after.size > before.size,
         "append must add files without rewriting existing ones")
       // the keyed semi/anti must leave the index side exchange-free —
       // only the batch hashes shuffle into the index bucketing
-      val appendPlans = plans.toArray(Array.empty[
-        org.apache.spark.sql.execution.SparkPlan])
       assert(appendPlans.nonEmpty)
       appendPlans.foreach(assertIndexUnshuffled(_, "span_app_spans"))
       // distinct-hash invariant survives the append
@@ -492,11 +490,8 @@ class BucketingSpec extends SparkSpec {
       full.collect().foreach(r =>
         assert(r.getAs[Long]("dup_tokens") == r.getAs[Long]("n_tokens"),
           s"fully-duplicated doc must be fully covered: $r"))
-    } finally {
-      spark.listenerManager.unregister(listener)
-      Seq("span_app_spans", "span_reb_spans").foreach(t =>
-        spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
+    } finally Seq("span_app_spans", "span_reb_spans").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("index probes tolerate an EMPTY batch (post-recovery empty micro-batch shape)") {
@@ -754,5 +749,134 @@ class BucketingSpec extends SparkSpec {
       assertIndexUnshuffled(plan, "link_app")
     } finally Seq("link_app", "link_reb").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  // ---------------- stage-then-commit rewrites ----------------
+
+  test("a failed writeIvfIndex rebuild keeps the previous version, still bucket-pruned") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val centroids = Similarity.sampleCentroids(emb, "vec_id", "embedding", 16)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", centroids,
+      "ivf_fail", numBuckets = 16)
+    try {
+      val queries = emb.filter(col("vec_id") < 5)
+      def probe() = Similarity.probeIvfIndex(spark, "ivf_fail", queries,
+        "vec_id", "embedding", k = 5, centroids = centroids, nProbe = 3)
+      def canon(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
+      val before = rows("ivf_fail")
+      val probedBefore = canon(probe())
+      // one id's vector raises while the new version is being written
+      val bad = emb.agg(max(col("vec_id"))).head.get(0)
+      val poisoned = emb.withColumn("embedding",
+        when(col("vec_id") === bad, raise_error(lit("poisoned vector")))
+          .otherwise(col("embedding")))
+      intercept[Exception](Similarity.writeIvfIndex(poisoned, "vec_id", "embedding",
+        centroids, "ivf_fail", numBuckets = 16))
+      assert(rows("ivf_fail") == before, "a failed rebuild changed the live index")
+      val after = probe()
+      assert(canon(after) == probedBefore)
+      val ps = after.queryExecution.executedPlan.toString
+      val pruned = "SelectedBucketsCount: (\\d+) out of (\\d+)".r.findFirstMatchIn(ps)
+      assert(pruned.isDefined && pruned.get.group(1).toInt < pruned.get.group(2).toInt,
+        s"probe after a failed rebuild should still prune buckets:\n$ps")
+      assertOneVersion("ivf_fail", 16)
+    } finally spark.sql("DROP TABLE IF EXISTS ivf_fail")
+  }
+
+  test("a failed writeDedupIndex rebuild keeps _exact, _bands and _texts at their previous version") {
+    val docs = Tables(spark, sf0001).documents
+    val parts = Seq("_exact", "_bands", "_texts")
+    Dedup.writeDedupIndex(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text",
+      "ded_fail", numBuckets = 8)
+    try {
+      val before = parts.map(p => rows(s"ded_fail$p"))
+      val bad = docs.agg(max(col("doc_id"))).head.get(0)
+      val poisoned = docs.withColumn("text",
+        when(col("doc_id") === bad, raise_error(lit("poisoned text"))).otherwise(col("text")))
+      intercept[Exception](Dedup.writeDedupIndex(poisoned, "doc_id", "text",
+        "ded_fail", numBuckets = 8))
+      assert(parts.map(p => rows(s"ded_fail$p")) == before,
+        "a failed rebuild changed the live index")
+      parts.foreach(p => assertOneVersion(s"ded_fail$p", 8))
+    } finally parts.foreach(p => spark.sql(s"DROP TABLE IF EXISTS ded_fail$p"))
+  }
+
+  test("a multi-table writeBucketed whose second table fails commits neither") {
+    import spark.implicits._
+    import Bucketing.Target
+    val v1 = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    Bucketing.writeBucketed(2, Target(v1, "multi_a", Seq("k")), Target(v1, "multi_b", Seq("k")))
+    try {
+      val before = (rows("multi_a"), rows("multi_b"))
+      val v2 = Seq((3L, "c")).toDF("k", "v")
+      val failing = v2.withColumn("v", raise_error(lit("second table fails")).cast("string"))
+      intercept[Exception](Bucketing.writeBucketed(2,
+        Target(v2, "multi_a", Seq("k")), Target(failing, "multi_b", Seq("k"))))
+      assert((rows("multi_a"), rows("multi_b")) == before,
+        "a table was committed although another failed to stage")
+      Seq("multi_a", "multi_b").foreach(assertOneVersion(_, 2))
+    } finally Seq("multi_a", "multi_b").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("a rewrite after a crashed attempt's leftover stage succeeds and removes it") {
+    import spark.implicits._
+    Bucketing.writeBucketed(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "left_stage", Seq("k"), 2)
+    try {
+      // what a crash inside a stage write leaves: an external stage
+      // entry and its directory beside the live version
+      val crashed = spark.sessionState.catalog
+        .defaultTablePath(TableIdentifier("left_stage")).toString + "__vcrashed"
+      Seq((9L, "z")).toDF("k", "v").write.option("path", crashed)
+        .saveAsTable("left_stage__stage")
+      assert(tableDirs("left_stage").size == 2)
+      Bucketing.writeBucketed(Seq((3L, "c")).toDF("k", "v"), "left_stage", Seq("k"), 2)
+      assert(rows("left_stage") == Seq("3|c"))
+      assertOneVersion("left_stage", 2)
+    } finally Seq("left_stage", "left_stage__stage").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("every rewrite, purge and compaction leaves one MANAGED bucketed version; DROP TABLE removes it") {
+    import graft.operators.Graph
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val centroids = Similarity.sampleCentroids(emb, "vec_id", "embedding", 8)
+    val docs = Tables(spark, sf0001).documents.filter(col("doc_id") % 5 =!= 0)
+    val ev = Tables(spark, sf0001).events.select(
+      col("user_id"), get_json_object(col("props"), "$.k").cast("long").as("item"))
+    val dedup = Seq("_exact", "_bands", "_texts").map("ded_ver" + _)
+    val tables = Seq("ivf_ver", "co_ver_profile", "co_ver_pairs") ++ dedup
+    try {
+      Similarity.writeIvfIndex(emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
+        centroids, "ivf_ver", numBuckets = 8)
+      assertOneVersion("ivf_ver", 8)
+      val first = tableDirs("ivf_ver")
+      Similarity.writeIvfIndex(emb, "vec_id", "embedding", centroids, "ivf_ver", numBuckets = 8)
+      assertOneVersion("ivf_ver", 8)
+      assert(tableDirs("ivf_ver") != first, "a rewrite must commit a new version directory")
+      Similarity.purgeIvfIndex(spark, "ivf_ver",
+        emb.filter(col("vec_id") % 7 === 3).select("vec_id"), numBuckets = 8)
+      assertOneVersion("ivf_ver", 8)
+      Similarity.appendIvfIndex("ivf_ver", emb.filter(col("vec_id") % 7 === 3),
+        "vec_id", "embedding", centroids, numBuckets = 8)
+      Bucketing.compactBucketed(spark, "ivf_ver", Seq("cell"), numBuckets = 8,
+        sortCols = Seq("cell", "neighbor_id"))
+      assertOneVersion("ivf_ver", 8)
+      assert(rows("ivf_ver").size == emb.count())
+
+      Dedup.writeDedupIndex(docs, "doc_id", "text", "ded_ver", numBuckets = 4)
+      Dedup.purgeDedupIndex(spark, "ded_ver",
+        docs.filter(col("doc_id") % 3 === 0).select("doc_id"), numBuckets = 4)
+      dedup.foreach(assertOneVersion(_, 4))
+      Graph.writeCooccurrenceIndex(spark, "co_ver", ev, "user_id", "item", numBuckets = 4)
+      Graph.purgeCooccurrence(spark, "co_ver",
+        ev.filter(col("user_id") % 3 === 0).select(col("user_id")), numBuckets = 4)
+      Seq("co_ver_profile", "co_ver_pairs").foreach(assertOneVersion(_, 4))
+
+      tables.foreach { t =>
+        spark.sql(s"DROP TABLE $t")
+        assert(tableDirs(t).isEmpty, s"DROP TABLE $t left ${tableDirs(t)}")
+      }
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

@@ -66,5 +66,10 @@ class ExecutorLossSpec extends AnyFunSuite {
     // and held their contracts
     assert(line.contains(""""vacuum":{"pass":true,"held_lazy_failed":true,"asof_pruned":true,"marker_hook":true,"marker_served_base":true"""),
       s"vacuum drill verdict missing/failed: $line")
+    // drill 8: an executor halt inside an IVF index rewrite's stage
+    // write — the previous version served until the commit, the
+    // committed index equal to a no-failure build
+    assert(line.contains(""""ivf_rewrite":{"pass":true,"killed":true,"held_previous":true"""),
+      s"ivf_rewrite drill verdict missing/failed: $line")
   }
 }

@@ -140,33 +140,6 @@ class PlanSpec extends SparkSpec {
 
   // ---------------- §2.4 loop pre-partition guards (round 16) ----------------
 
-  /** Executed plans of every driver action during `body` (listener bus
-    * is async — polled to quiescence before reading). */
-  private def capturedPlans(
-      body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    val plans = new java.util.concurrent.CopyOnWriteArrayList[
-      org.apache.spark.sql.execution.SparkPlan]()
-    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          d: Long): Unit = { plans.add(qe.executedPlan); () }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(qel)
-    try body finally {
-      var prev = -1
-      var spins = 0
-      while (prev != plans.size && spins < 50) {
-        prev = plans.size; Thread.sleep(100); spins += 1
-      }
-      spark.listenerManager.unregister(qel)
-    }
-    import scala.jdk.CollectionConverters._
-    plans.asScala.toSeq
-  }
-
   /** Shuffle exchanges that re-partition a CACHED relation directly
     * (only narrow row-level ops between exchange and cache scan) — the
     * §2.4 waste the round-15 loop pre-partitions removed: a static loop
@@ -211,9 +184,9 @@ class PlanSpec extends SparkSpec {
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (7L, 8L),
         (1L, 9L), (9L, 12L), (5L, 13L)).toDF("id_a", "id_b")
-      val offending = capturedPlans {
+      val offending = capturePlans {
         graft.operators.Dedup.connectedComponents(pairs).collect(); ()
-      }.flatMap(cacheReshuffles)
+      }.map(_.executedPlan).flatMap(cacheReshuffles)
       assert(offending.isEmpty, offending.mkString("\n"))
     }
   }
@@ -224,10 +197,10 @@ class PlanSpec extends SparkSpec {
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (2L, 5L),
         (5L, 6L)).toDF("src", "dst")
-      val offending = capturedPlans {
+      val offending = capturePlans {
         graft.operators.Graph.anfProfile(edges, "src", "dst", radius = 3)
           .collect(); ()
-      }.flatMap(cacheReshuffles)
+      }.map(_.executedPlan).flatMap(cacheReshuffles)
       assert(offending.isEmpty, offending.mkString("\n"))
     }
   }
@@ -239,11 +212,11 @@ class PlanSpec extends SparkSpec {
       val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (3L, 4L, 2L),
         (4L, 1L, 1L), (2L, 5L, 4L)).toDF("src", "dst", "w")
       val seeds = Seq((1L, 10L), (4L, 20L)).toDF("node", "label")
-      val offending = capturedPlans {
+      val offending = capturePlans {
         graft.operators.Graph.labelPropagationQuantized(
           edges, "src", "dst", "w", seeds, "node", "label", iters = 3)
           .collect(); ()
-      }.flatMap(cacheReshuffles)
+      }.map(_.executedPlan).flatMap(cacheReshuffles)
       assert(offending.isEmpty, offending.mkString("\n"))
     }
   }

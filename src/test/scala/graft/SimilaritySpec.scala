@@ -244,33 +244,14 @@ class SimilaritySpec extends SparkSpec {
     // plan size must NOT grow with k — the unrolled selected-set
     // literal form grows O(k·d) and fails this
     def runMeasured(k: Int): (Seq[(Int, Long, Long)], Int) = {
-      val maxLen = new java.util.concurrent.atomic.AtomicInteger
-      val events = new java.util.concurrent.atomic.AtomicInteger
-      val qel = new org.apache.spark.sql.util.QueryExecutionListener {
-        override def onSuccess(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            d: Long): Unit = {
-          maxLen.updateAndGet(m => math.max(m, qe.executedPlan.toString.length))
-          events.incrementAndGet(); ()
-        }
-        override def onFailure(f: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = { events.incrementAndGet(); () }
-      }
-      spark.listenerManager.register(qel)
-      val got =
-        try graft.operators.Similarity
+      var got = Seq.empty[(Int, Long, Long)]
+      val plans = capturePlans {
+        got = graft.operators.Similarity
           .kCenterGreedy(emb, "vec_id", "embedding", k = k)
           .orderBy("rank").collect()
           .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-        finally {
-          var prev = -1; var spins = 0
-          while (prev != events.get && spins < 50) {
-            prev = events.get; Thread.sleep(100); spins += 1
-          }
-          spark.listenerManager.unregister(qel)
-        }
-      (got, maxLen.get)
+      }
+      (got, plans.map(_.executedPlan.toString.length).foldLeft(0)(math.max))
     }
     val (got8, len8) = runMeasured(8)
     val (got64, len64) = runMeasured(64)
@@ -638,31 +619,12 @@ class SimilaritySpec extends SparkSpec {
 
   test("a writeIvfIndex plan prints the cell count, not the centroid coordinates") {
     val cents = Similarity.sampleCentroids(emb, "vec_id", "embedding", nCells = 16)
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit = {
-        plans.add(qe.toString); ()
-      }
-      override def onFailure(f: String,
-          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = {
-        plans.add(qe.toString); ()
-      }
-    }
-    spark.listenerManager.register(qel)
-    try {
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents,
-        "ivf_plan_text_spec", numBuckets = 4)
-      var prev = -1; var spins = 0
-      while ((plans.isEmpty || prev != plans.size) && spins < 50) {
-        prev = plans.size; Thread.sleep(100); spins += 1
-      }
-    } finally {
-      spark.listenerManager.unregister(qel)
-      spark.sql("DROP TABLE IF EXISTS ivf_plan_text_spec")
-    }
-    import scala.jdk.CollectionConverters._
-    val texts = plans.asScala.toSeq
+    val texts =
+      try capturePlans {
+        Similarity.writeIvfIndex(emb, "vec_id", "embedding", cents,
+          "ivf_plan_text_spec", numBuckets = 4)
+      }.map(_.toString)
+      finally spark.sql("DROP TABLE IF EXISTS ivf_plan_text_spec")
     assert(texts.exists(_.contains("nearest_cells(")), s"no write plan seen:\n${texts.mkString("\n")}")
     val coords = cents.flatMap(_._2).map(_.toString).filter(_.length >= 8).distinct
     assert(coords.nonEmpty)

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,6 +70,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       case (key, Some(v)) => spark.conf.set(key, v)
       case (key, None) => spark.conf.unset(key)
     }
+  }
+
+  /** The query executions of the driver actions that succeed during
+    * `body`, in completion order, read once the listener bus has
+    * delivered every event `body` caused. */
+  def capturePlans(body: => Unit): Seq[QueryExecution] = {
+    val qes = new java.util.concurrent.CopyOnWriteArrayList[QueryExecution]()
+    val qel = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { qes.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    try body finally {
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(qel)
+    }
+    qes.asScala.toSeq
   }
 
   /** (driver actions, completed stages) during `body` — the loop-hygiene
